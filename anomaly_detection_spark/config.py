@@ -16,6 +16,14 @@ table with an explicit numeric column. Each detector contributes a
 ``status_code`` is the OR-combination (min), matching how the reference
 reports a record that any detector flagged.
 
+Plan shape: a flat fan-out, as in the reference consumer, which hands
+each message to every detector independently (consumer.py:184-191).
+Every detector reads the base frame (after its own time filter), emits
+narrow ``(keys, order, code[, suggested_value])`` rows, and joins back
+onto the base exactly once; one projection then turns missing verdicts
+into Undefined. The plan grows linearly with the number of detectors,
+and a ``Combination`` stack compiles its sub-detectors the same way.
+
 Every reference algorithm compiles, including the model-backed ones
 (GAN -> neural.gan_check, Trend_Classification -> neural.trend_nn_check,
 RRCF_trees -> rrcf.rrcf_stream_check, both nets hand-rolled numpy since
@@ -131,6 +139,46 @@ def _time_filter_spec(spec):
         spec = ast.literal_eval(spec)
     target, tol = spec
     return tuple(target), tuple(tol)
+
+
+def _join_verdicts(
+    df: DataFrame, detectors, *, keys: str, order: str,
+    suggested: bool = False,
+) -> tuple[DataFrame, list[str]]:
+    """Flat fan-out, the reference consumer's shape (consumer.py:184-191):
+    every ``(name, transform, time_filter)`` detector reads the base
+    ``df``, emits narrow ``(keys, order, code)`` rows (plus the repair
+    ``suggested_value`` of a normalization-wrapped detector when
+    ``suggested``), and is joined back onto ``df`` exactly once. Detectors
+    never see each other's verdicts, so the plan grows linearly with
+    their number. Rows a detector never saw (time filter, or warm-up rows
+    a feature construction dropped, e.g. GAN's shift windows) carry no
+    verdict and coalesce to Undefined(2) in one final projection."""
+    from pyspark.sql.types import NumericType
+
+    from anomaly_detection_spark.operators.constraints import (
+        time_of_day_predicate,
+    )
+
+    ts = F.col(order)
+    if isinstance(df.schema[order].dataType, NumericType):
+        ts = F.timestamp_seconds(ts)
+    out, names = df, []
+    for name, t, flt in detectors:
+        # filtered-out messages are never INSERTED into this detector
+        # (consumer.py:184-191): its recurrences and windows advance only
+        # on in-window rows
+        checked = t(df if flt is None
+                    else df.filter(time_of_day_predicate(ts, *flt)))
+        picked = [F.col("code").alias(name)]
+        if suggested and "suggested_value" in checked.columns:
+            picked.append(F.col("suggested_value").alias(
+                name.replace("code_", "suggested_value_", 1)))
+        out = out.join(checked.select(keys, order, *picked),
+                       on=[keys, order], how="left")
+        names.append(name)
+    return out.withColumns(
+        {n: F.coalesce(F.col(n), F.lit(2)) for n in names}), names
 
 
 def compile_detector(
@@ -469,23 +517,13 @@ def _compile_base(
                 "text — use operators.windowed.percent_score_alicante)")
         subs = [
             (f"_comb_{i}_{_clean_alg(a).lower()}",
-             compile_detector(a, c, keys=keys, order=order, value=value))
+             compile_detector(a, c, keys=keys, order=order, value=value),
+             None)
             for i, (a, c) in enumerate(zip(sub_algs, sub_confs))
         ]
 
         def t(df):
-            # chain the joins off the running frame (never re-derive df
-            # per sub-detector — the same single-chain shape as
-            # compile_config.run; sub-detectors tolerate extra columns)
-            out = df
-            names = []
-            for name, sub in subs:
-                checked = sub(out)
-                out = out.join(
-                    checked.select(keys, order, F.col("code").alias(name)),
-                    on=[keys, order], how="left",
-                ).withColumn(name, F.coalesce(F.col(name), F.lit(2)))
-                names.append(name)
+            out, names = _join_verdicts(df, subs, keys=keys, order=order)
             if det_name == "AND":
                 return out.withColumn("code", combine_and(names)).drop(*names)
             if det_name == "OR":
@@ -621,43 +659,9 @@ def compile_config(
 
     def run(df: DataFrame) -> DataFrame:
         from anomaly_detection_spark.operators.combination import combine_or
-        from anomaly_detection_spark.operators.constraints import (
-            time_of_day_predicate,
-        )
 
-        out = df
-        code_cols = []
-        for name, t, flt in compiled:
-            src = out
-            if flt is not None:
-                # reference semantics (consumer.py:184-191): filtered-out
-                # messages are never INSERTED into this detector — its
-                # recurrences/windows advance only on in-window rows, and
-                # unseen rows carry no verdict (Undefined after the join)
-                target, tol = flt
-                ts = F.col(order)
-                from pyspark.sql.types import NumericType
-                if isinstance(df.schema[order].dataType, NumericType):
-                    ts = F.timestamp_seconds(ts)
-                src = out.filter(time_of_day_predicate(ts, target, tol))
-            checked = t(src)
-            # per-detector ops name their verdict 'code'; rename + join back
-            # (a normalization-wrapped detector also carries its repair
-            # suggestion — one join brings both columns)
-            joined_keys = [keys, order]
-            picked = [F.col("code").alias(name)]
-            if "suggested_value" in checked.columns:
-                picked.append(F.col("suggested_value").alias(
-                    name.replace("code_", "suggested_value_", 1)))
-            out = out.join(
-                checked.select(*joined_keys, *picked),
-                on=joined_keys, how="left",
-            )
-            # rows the detector never saw (time filter, or warm-up rows a
-            # feature construction dropped, e.g. GAN's shift windows)
-            # carry no verdict -> Undefined, reference consumer.py:184-191
-            out = out.withColumn(name, F.coalesce(F.col(name), F.lit(2)))
-            code_cols.append(name)
+        out, code_cols = _join_verdicts(df, compiled, keys=keys, order=order,
+                                        suggested=True)
         return out.withColumn("status_code", combine_or(code_cols))
 
     return run

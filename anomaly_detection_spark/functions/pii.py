@@ -110,7 +110,8 @@ def blocked_flag_expr(text: Column, domains: list[str]) -> Column:
 
 
 def blocked_flag_sql(col: str, domains: list[str]) -> str:
-    vals = ", ".join(f"'{d}'" for d in sorted(domains))
+    vals = ", ".join("'" + d.replace("'", "''") + "'"
+                     for d in sorted(domains))
     return f"list_has_any({url_hosts_sql(col)}, [{vals}])"
 
 

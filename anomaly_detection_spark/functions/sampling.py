@@ -209,7 +209,8 @@ def budget_mixture_sql(budgets: dict[str, float], *, table: str = "documents",
     from anomaly_detection_spark.functions.text import ws_token_count_sql
 
     tok = token_sql or ws_token_count_sql("text")
-    vals = ", ".join(f"('{k}', {float(v)})" for k, v in sorted(budgets.items()))
+    vals = ", ".join("('" + k.replace("'", "''") + f"', {float(v)})"
+                     for k, v in sorted(budgets.items()))
     return f"""
 WITH tok AS (
   SELECT *, CAST({tok} AS BIGINT) AS _tokens FROM {table}

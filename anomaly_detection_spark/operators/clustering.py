@@ -27,14 +27,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.operators.mvoutlier import training_rows
 from anomaly_detection_spark.sampling import bounded_sample_rows
 
 
 def _core_samples(X: np.ndarray, eps: float, min_samples: int,
                   max_train: int = 4096, seed: int = 0) -> np.ndarray:
-    if len(X) > max_train:
-        X = X[np.random.default_rng(seed).choice(len(X), max_train,
-                                                 replace=False)]
+    X = training_rows(X, max_train, seed)
     d2 = ((X[:, None, :] - X[None, :, :]) ** 2).sum(-1)
     neighbors = (d2 <= eps * eps).sum(axis=1)
     return X[neighbors >= min_samples]

@@ -51,6 +51,19 @@ def _c_vec(n: np.ndarray) -> np.ndarray:
     return out
 
 
+def training_rows(X: np.ndarray, max_train: int, seed: int) -> np.ndarray:
+    """Up to ``max_train`` of ``X``'s rows, drawn seeded from their
+    canonical (lexicographic) order. Training draws pick rows by
+    position, so a grouped fit on the result gives the same model, and
+    the same verdicts, whatever order the shuffle delivered the group's
+    rows in."""
+    X = X[np.lexsort(X.T[::-1])]
+    if len(X) > max_train:
+        X = X[np.random.default_rng(seed).choice(len(X), max_train,
+                                                 replace=False)]
+    return X
+
+
 class IsolationForest:
     """Array-encoded forest. Each tree: feature[i], threshold[i],
     left[i], right[i] (node indices; -1 => leaf), size[i] (training rows
@@ -240,9 +253,7 @@ def iforest_check(
             out_pdf["score"] = 0.0
             out_pdf[out] = np.int32(2)
             return out_pdf
-        train = X if len(X) <= max_train else X[
-            np.random.default_rng(seed).choice(len(X), max_train, replace=False)
-        ]
+        train = training_rows(X, max_train, seed)
         forest = IsolationForest(n_trees, subsample, seed).fit(train)
         s = forest.score(X)
         thr = score_threshold
@@ -454,9 +465,7 @@ def pca_iforest_check(
             out_pdf["score"] = 0.0
             out_pdf[out] = np.int32(2)
             return out_pdf
-        train = X if len(X) <= max_train else X[
-            np.random.default_rng(seed).choice(len(X), max_train, replace=False)
-        ]
+        train = training_rows(X, max_train, seed)
         mu = train.mean(axis=0)
         _, _, Vt = np.linalg.svd(train - mu, full_matrices=False)
         comps = Vt[:n_components]
@@ -598,9 +607,7 @@ def codisp_check(
             out_pdf["codisp"] = 0.0
             out_pdf[out] = np.int32(2)
             return out_pdf
-        train = X if len(X) <= max_train else X[
-            np.random.default_rng(seed).choice(len(X), max_train, replace=False)
-        ]
+        train = training_rows(X, max_train, seed)
         forest = IsolationForest(n_trees, subsample, seed).fit(train)
         s = codisp_scores(forest, X)
         out_pdf["codisp"] = s

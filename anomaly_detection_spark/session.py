@@ -5,6 +5,10 @@ Local-mode knobs mirror what a real cluster submit would set via
 skew-join splitting, partition coalescing), Arrow on (every pandas UDF
 crosses the JVM<->Python boundary in columnar batches), shuffle
 partitions sized to the core count rather than the 200 default.
+
+Defaults fit the host: every core ``os.cpu_count()`` reports and half of
+physical RAM for the driver (capped at 16g). ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM`` override them.
 """
 
 from __future__ import annotations
@@ -14,14 +18,37 @@ import os
 from pyspark.sql import SparkSession
 
 
+MAX_DRIVER_MB = 16 * 1024
+
+
+def session_defaults(
+    environ=os.environ, cpu_count: int | None = None,
+    phys_bytes: int | None = None,
+) -> tuple[int, str]:
+    """Default ``(cores, driver_memory)`` for :func:`get_spark`: the
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` overrides, else
+    every core and half of physical RAM, capped at ``MAX_DRIVER_MB``.
+    ``cpu_count`` / ``phys_bytes`` stand in for the host's values."""
+    cores = environ.get("SPARK_GRAFT_CPUS")
+    if cores is None:
+        cores = cpu_count or os.cpu_count() or 1
+    mem = environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        if phys_bytes is None:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{min(MAX_DRIVER_MB, phys_bytes // 2**21)}m"
+    return int(cores), mem
+
+
 def get_spark(
     app_name: str = "anomaly_detection_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    default_cores, driver_mem = session_defaults()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -34,7 +61,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -396,3 +396,72 @@ def test_model_backed_config_fuzz(spark):
         assert len(out) == n, (trial, algs)
         for r in out:
             assert r["status_code"] in (-1, 0, 1, 2), (trial, algs, r)
+
+
+# the first k of these run in the plan-shape tests: one detector per
+# implementing layer (constraints, sequential, windowed, mvoutlier)
+_PLAN_SUITE = [
+    ("BorderCheck()", {"UL": 50.0, "LL": -10.0, "warning_stages": [0.9]}),
+    ("EMA()", {"N": 5, "UL": 35.0, "LL": 5.0, "warning_stages": [0.9]}),
+    ("Welford()", {"N": 30, "X": 6.0, "warning_stages": [0.8]}),
+    ("IsolationForest()", {"max_samples": 256, "contamination": 0.005}),
+]
+
+
+def _plan_counts(df):
+    """(FileScans, non-reused Exchanges) of ``df``'s physical plan as
+    planned, before adaptive execution could reuse any exchange."""
+    plan = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    scans = sum("FileScan" in line for line in plan)
+    exchanges = sum("Exchange" in line and "ReusedExchange" not in line
+                    for line in plan)
+    return scans, exchanges
+
+
+@pytest.fixture(scope="module")
+def series_parquet(spark, tmp_path_factory):
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = [(f"s{s}", 1_700_000_000.0 + 60.0 * i,
+             float(20 + 5 * np.sin(i / 7 + s) + rng.normal()))
+            for s in range(4) for i in range(200)]
+    path = str(tmp_path_factory.mktemp("plan") / "series.parquet")
+    spark.createDataFrame(
+        rows, "series string, ts double, value double").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 4])
+def test_config_plan_is_linear_in_detectors(series_parquet, k):
+    """Every detector reads the base frame and joins back once: k
+    detectors scan the input k+1 times and add at most two exchanges
+    each (a chained plan doubled both per detector: 16 scans and 26
+    exchanges at k=4)."""
+    algs, confs = zip(*_PLAN_SUITE[:k])
+    out = compile_config({"anomaly_detection_alg": list(algs),
+                          "anomaly_detection_conf": list(confs)})(
+        series_parquet)
+    scans, exchanges = _plan_counts(out)
+    assert scans <= k + 1, (k, scans)
+    assert exchanges <= 2 * k, (k, exchanges)
+    assert out.count() == series_parquet.count()
+
+
+def test_combination_plan_is_linear_in_sub_detectors(series_parquet):
+    algs, confs = zip(*_PLAN_SUITE[:3])
+    comb = compile_detector(
+        "Combination()", {"anomaly_algorithms": list(algs),
+                          "anomaly_algorithms_configurations": list(confs),
+                          "status_determiner": "OR()"},
+        keys="series", order="ts", value="value")(series_parquet)
+    scans, exchanges = _plan_counts(comb)
+    assert scans <= 4 and exchanges <= 6, (scans, exchanges)
+    # the determiner folds the same per-detector verdicts compile_config
+    # reports side by side
+    flat = compile_config({"anomaly_detection_alg": list(algs),
+                           "anomaly_detection_conf": list(confs)})(
+        series_parquet)
+    got = {(r["series"], r["ts"]): r["code"] for r in comb.collect()}
+    want = {(r["series"], r["ts"]): r["status_code"] for r in flat.collect()}
+    assert got == want

@@ -320,6 +320,45 @@ def test_blocklist_join_equals_expression(spark):
     assert set(joined) == set(range(8))  # total over all docs
 
 
+def test_blocklist_sql_escapes_quotes(spark):
+    """A domain containing a single quote must neither break nor inject
+    into the DuckDB twin: it stays one literal list element."""
+    import duckdb
+
+    from anomaly_detection_spark.functions.pii import (
+        blocked_flag_expr, blocked_flag_sql,
+    )
+
+    df = _pii_docs(spark)
+    domains = ["spam0.example", "o'hare.example", "x', 'h.io"]
+    spark_flags = {r["doc_id"]: r["b"] for r in df.select(
+        "doc_id", blocked_flag_expr(F.col("text"), domains).alias("b")
+    ).collect()}
+    con = duckdb.connect()
+    con.register("docs", df.toPandas())
+    duck = dict(con.execute(
+        f"SELECT doc_id, {blocked_flag_sql('text', domains)} FROM docs"
+    ).fetchall())
+    assert duck == spark_flags
+    # 'h.io' is only a substring of the quoted domain, never a list entry
+    assert duck[3] is True and duck[4] is False
+
+
+def test_budget_mixture_sql_escapes_quotes():
+    import duckdb
+
+    from anomaly_detection_spark.functions.sampling import budget_mixture_sql
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT * FROM (VALUES "
+                "(1, 'it''s', 'a b c'), (2, 'en', 'd e'), (3, 'x', 'f')) "
+                "t(doc_id, lang, text)")
+    sql = budget_mixture_sql({"it's": 1e9, "en": 1e9})
+    got = con.execute(
+        f"SELECT doc_id, _rate FROM ({sql}) ORDER BY doc_id").fetchall()
+    assert got == [(1, 1.0), (2, 1.0)]
+
+
 def test_pii_plan_shapes(spark):
     from anomaly_detection_spark.functions.pii import (
         blocked_by_join, pii_counts, redact_pii,

@@ -172,6 +172,53 @@ def test_iforest_check_spark(spark):
     assert len(flagged) <= 10  # few false positives
 
 
+@pytest.mark.parametrize("check", ["iforest", "pca_iforest", "codisp"])
+def test_forest_checks_ignore_row_order(spark, check):
+    """A grouped fit draws its training rows from the group's canonical
+    order, so its verdicts do not depend on the order in which the
+    shuffle delivers the rows."""
+    from anomaly_detection_spark.operators import mvoutlier
+
+    rng = np.random.default_rng(11)
+    rows = [(g, i, float(x), float(y))
+            for g in ("g1", "g2")
+            for i, (x, y) in enumerate(rng.normal(0, 1, (300, 2)))]
+    df = spark.createDataFrame(rows, "grp string, rid int, fx double, fy double")
+    fn = getattr(mvoutlier, f"{check}_check")
+    kw = {"n_trees": 20, "subsample": 64, "max_train": 200,
+          "extra_cols": ["rid"]}
+    if check == "codisp":
+        kw["threshold"] = 3.0
+    else:
+        kw["contamination"] = 0.05
+
+    def codes(frame):
+        return {(r["grp"], r["rid"]): r["code"]
+                for r in fn(frame, "grp", ["fx", "fy"], **kw).collect()}
+
+    want = codes(df)
+    assert codes(df.orderBy(F.rand(1))) == want
+    assert codes(df.orderBy(F.col("fx").desc())) == want
+    assert len(set(want.values())) > 1  # the check flags something
+
+
+def test_core_samples_ignore_row_order():
+    """The clustering twin of the test above, on the fit itself:
+    clustering_check_grouped only draws from groups over 4096 rows."""
+    from anomaly_detection_spark.operators.clustering import _core_samples
+
+    X = np.random.default_rng(4).normal(0, 1, (400, 2))
+    perm = np.random.default_rng(5).permutation(len(X))
+
+    def cores(M):
+        c = _core_samples(M, eps=0.3, min_samples=4, max_train=100)
+        return c[np.lexsort(c.T[::-1])]
+
+    want = cores(X)
+    assert 0 < len(want) < 100
+    assert np.array_equal(cores(X[perm]), want)
+
+
 def test_hll_distinct_spark(spark, corpus):
     from anomaly_detection_spark.operators.stats import hll_distinct
 
