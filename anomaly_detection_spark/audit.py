@@ -25,6 +25,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,10 +46,14 @@ class AuditLedger:
         self.fmt = audit_format
 
     def committed(self) -> DataFrame:
-        """Partition keys already committed (empty frame if no ledger yet)."""
+        """Partition keys already committed (empty frame if no ledger yet).
+        Any other read failure raises: reading an unreadable ledger as
+        empty would recompute every partition and append duplicate rows."""
         try:
             return self.spark.read.format(self.fmt).load(self.path)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], AUDIT_SCHEMA)
 
     def pending(self, partitions: DataFrame, key: str = "partition_key") -> DataFrame:

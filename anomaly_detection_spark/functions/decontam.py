@@ -64,7 +64,10 @@ def word_ngrams_sql(col: str, n: int, *, lower: bool = True,
     the end index, hence ``i : i + n - 1``). The split class is the
     explicit Java ``\\s`` set — RE2's ``\\s`` lacks vertical tab, so a
     bare ``\\s+`` here would tokenize VT-bearing docs differently from
-    the Spark side."""
+    the Spark side. With ``distinct``, DuckDB's ``list_distinct`` does
+    not keep element order (Spark's ``array_distinct`` does), so the
+    gram ARRAY's order is engine-dependent: the twin is only valid where
+    the grams are unnested or consumed as a set."""
     t = ascii_lower_sql(col) if lower else col
     words = (f"list_filter(string_split_regex(trim({t}), "
              f"'{JAVA_WS_RE}'), w -> w <> '')")

@@ -20,15 +20,19 @@ The hash is deliberately expressible in PORTABLE integer SQL (exact in
 both Spark and DuckDB, unlike xxhash64 which only Spark has), so the
 driver oracle replays the sample bit-for-bit:
 
-    u(key, seed) = (((key mod 2^32) XOR s) * 1597334677) mod 2^32 / 2^32
+    u(key, seed) = (((key mod 2^32) XOR (key >> 32) XOR s) * 1597334677)
+                   mod 2^32 / 2^32
     where s = (seed * 1597334677) mod 2^32  (a Python-side constant)
+    and >> is the arithmetic (sign-extending) shift
 
 1597334677 is the public 32-bit Knuth/Fibonacci multiplier (2^32/phi,
-odd); ``key mod 2^32`` first keeps every intermediate under 2^63 so the
-arithmetic is exact BIGINT in any engine (max (2^32-1)*1597334677
-~= 6.86e18 < 9.22e18). The seed is XOR-mixed into the key BEFORE the
-multiply — adding it after would shift every hash by a constant, so
-adjacent seeds would select near-identical samples (caught by
+odd). Folding the key to its low half and XOR-ing in its high half keeps
+every intermediate within +-2^32 before the multiply, so the arithmetic
+is exact BIGINT in any engine (max 2^32*1597334677 ~= 6.86e18 <
+9.22e18), and keys that differ by a multiple of 2^32 still hash apart.
+For keys in [0, 2^32) the high half is 0. The seed is XOR-mixed into the
+key BEFORE the multiply — adding it after would shift every hash by a
+constant, so adjacent seeds would select near-identical samples (caught by
 test_deterministic_sample_is_stable_and_seeded); flipping input bits
 instead scrambles the product's high bits, which is where the unit
 value comes from (division by 2^32 keeps the high bits — exactly where
@@ -56,7 +60,9 @@ def hash_unit(key: Column, seed: int = 0) -> Column:
     docstring); the same formula in ANSI SQL is :func:`hash_unit_sql`.
     """
     s = (int(seed) * KNUTH32) % _M32
-    k = F.pmod(key.cast("bigint"), F.lit(_M32)).bitwiseXOR(F.lit(s))
+    key = key.cast("bigint")
+    k = (F.pmod(key, F.lit(_M32)).bitwiseXOR(F.shiftright(key, 32))
+         .bitwiseXOR(F.lit(s)))
     h = F.pmod(k * F.lit(KNUTH32), F.lit(_M32))
     return (h / F.lit(float(_M32))).cast("double")
 
@@ -68,7 +74,8 @@ def hash_unit_sql(key: str, seed: int = 0) -> str:
     identically in both engines (no non-negativity assumption at the
     deterministic_sample / split entry points)."""
     s = (int(seed) * KNUTH32) % _M32
-    k = f"((({key} % {_M32}) + {_M32}) % {_M32})"
+    key = f"CAST({key} AS BIGINT)"
+    k = f"xor((({key} % {_M32}) + {_M32}) % {_M32}, {key} >> 32)"
     h = f"(((xor({k}, {s}) * {KNUTH32}) % {_M32}) + {_M32}) % {_M32}"
     return f"({h}) / {float(_M32)}"
 

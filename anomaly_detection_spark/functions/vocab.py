@@ -68,12 +68,13 @@ def vocab_topk(docs: DataFrame, k: int, *, id_col: str = "doc_id",
     ascending) with document frequency and smoothed IDF
     ``ln((1 + N) / (1 + df)) + 1`` (the standard smoothed formulation).
 
-    ``n_docs`` defaults to a one-row count over the corpus (reuses the
-    same scan; at scale pass the known table row count to skip it).
+    ``n_docs`` defaults to the number of distinct ids, the same unit as
+    ``doc_freq`` (at scale pass the known document count to skip that
+    job).
     """
     stats = word_stats(docs, id_col=id_col, text_col=text_col)
     if n_docs is None:
-        n_docs = docs.select(id_col).count()
+        n_docs = docs.select(id_col).distinct().count()
     return (stats
             .orderBy(F.col("count").desc(), F.col("word").asc())
             .limit(k)
@@ -90,9 +91,10 @@ def stopword_candidates(docs: DataFrame, *, max_doc_frac: float = 0.5,
     """Terms present in more than ``max_doc_frac`` of documents — the
     corpus-derived stop-word list (drop-from-index / quality-feature
     denominator candidates). Same single aggregate as word_stats plus a
-    scalar threshold filter."""
+    scalar threshold filter. ``n_docs`` defaults to the number of
+    distinct ids, as in :func:`vocab_topk`."""
     if n_docs is None:
-        n_docs = docs.select(id_col).count()
+        n_docs = docs.select(id_col).distinct().count()
     return (word_stats(docs, id_col=id_col, text_col=text_col)
             .filter(F.col("doc_freq") > float(max_doc_frac) * float(n_docs)))
 

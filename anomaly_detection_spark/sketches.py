@@ -1,24 +1,16 @@
-"""Mergeable sketches — the engine's distributed-aggregation primitives.
+"""Mergeable sketches that Spark does not ship — the merge half of the
+engine's distributed aggregations.
 
-PySpark has no public vectorized UDAF with a ``merge`` phase, so every
-sketch here follows the same explicit contract the reference's stateful
-scorers implied (zero / update / merge / finalize), executed as:
+Spark 4.1 computes moments, HLL distinct counts and KLL quantiles natively
+(see ``operators/stats.py`` and ``operators/drift.py``), so only two
+pieces remain here, each with an associative, commutative merge:
 
-    mapInPandas(update over Arrow batches)  ->  per-partition partial rows
-    groupBy(...).applyInPandas(merge)       ->  merged sketch / final stats
-
-All update/merge math is whole-batch numpy — zero per-row Python (north
-rule). Each sketch's merge is associative + commutative and is tested for
-exactness/monotonicity in tests/test_sketches.py.
-
-Sketches:
-  * Welford moments (count, mean, M2) — parallel merge via Chan's update;
-    the distributed generalization of the reference's online Welford
-    recurrence (/root/reference/src/algorithms/welford.py:176-191).
-  * t-digest (merging variant, Dunning & Ertl) — quantiles for the drift
-    checks (KS on sketches) without collecting data.
+  * Welford moments (count, mean, M2) — :func:`welford_merge`, Chan's
+    parallel update; the streaming detector merges per-batch moments
+    into its state with it (``streaming/stateful.py``).
   * Bloom filter (numpy bitset) — broadcastable pre-filter for
-    referential checks; OR-merge.
+    referential checks; OR-merge. ``bloom_filter_agg`` / ``might_contain``
+    are not registered in PySpark 4.1, so it stays hand-rolled.
 """
 
 from __future__ import annotations
@@ -26,27 +18,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-
-
-# ---------------------------------------------------------------------------
-# Welford / Chan moments
-# ---------------------------------------------------------------------------
-
-def welford_zero() -> tuple[float, float, float]:
-    return (0.0, 0.0, 0.0)
-
-
-def welford_update_batch(state, values: np.ndarray):
-    """Fold a whole batch into (count, mean, M2) by computing the batch's
-    exact moments vectorized, then merging — O(1) scalar work per batch."""
-    v = np.asarray(values, dtype=np.float64)
-    v = v[~np.isnan(v)]
-    if v.size == 0:
-        return state
-    bn = float(v.size)
-    bmean = float(v.mean())
-    bM2 = float(((v - bmean) ** 2).sum())
-    return welford_merge(state, (bn, bmean, bM2))
 
 
 def welford_merge(a, b):
@@ -62,149 +33,6 @@ def welford_merge(a, b):
     mean = ma + delta * nb / n
     M2 = M2a + M2b + delta * delta * na * nb / n
     return (n, mean, M2)
-
-
-def welford_finalize(state):
-    """-> (count, mean, variance_pop, variance_samp)."""
-    n, mean, M2 = state
-    if n == 0:
-        return (0.0, float("nan"), float("nan"), float("nan"))
-    var_pop = M2 / n
-    var_samp = M2 / (n - 1) if n > 1 else float("nan")
-    return (n, mean, var_pop, var_samp)
-
-
-# ---------------------------------------------------------------------------
-# t-digest (merging variant; Dunning & Ertl, "Computing extremely accurate
-# quantiles using t-digests", arXiv:1902.04023 — public algorithm)
-# ---------------------------------------------------------------------------
-
-class TDigest:
-    """Compact mergeable quantile sketch. Centroids kept as parallel numpy
-    arrays (mean, weight), compressed with the k1 scale function.
-
-    Serialization: ``to_arrays`` -> (means, weights) float64 arrays, so a
-    digest rides through Arrow as two list<double> columns.
-    """
-
-    __slots__ = ("delta", "means", "weights", "_min", "_max")
-
-    def __init__(self, delta: int = 200):
-        self.delta = delta
-        self.means = np.empty(0, dtype=np.float64)
-        self.weights = np.empty(0, dtype=np.float64)
-        self._min = math.inf
-        self._max = -math.inf
-
-    # -- construction ------------------------------------------------------
-    @classmethod
-    def from_values(cls, values: np.ndarray, delta: int = 200) -> "TDigest":
-        d = cls(delta)
-        v = np.asarray(values, dtype=np.float64)
-        v = v[~np.isnan(v)]
-        if v.size:
-            d.means = np.sort(v)
-            d.weights = np.ones_like(d.means)
-            d._min = float(d.means[0])
-            d._max = float(d.means[-1])
-            d._compress()
-        return d
-
-    @classmethod
-    def from_arrays(cls, means, weights, delta: int = 200) -> "TDigest":
-        d = cls(delta)
-        d.means = np.asarray(means, dtype=np.float64)
-        d.weights = np.asarray(weights, dtype=np.float64)
-        if d.means.size:
-            d._min = float(d.means.min())
-            d._max = float(d.means.max())
-        return d
-
-    def to_arrays(self):
-        return self.means, self.weights
-
-    # -- merge -------------------------------------------------------------
-    def merge(self, other: "TDigest") -> "TDigest":
-        out = TDigest(self.delta)
-        means = np.concatenate([self.means, other.means])
-        weights = np.concatenate([self.weights, other.weights])
-        order = np.argsort(means, kind="mergesort")
-        out.means, out.weights = means[order], weights[order]
-        out._min = min(self._min, other._min)
-        out._max = max(self._max, other._max)
-        out._compress()
-        return out
-
-    # -- compression (k1 scale: k(q) = delta/(2*pi) * asin(2q-1)) ----------
-    def _k(self, q: np.ndarray) -> np.ndarray:
-        return self.delta / (2.0 * math.pi) * np.arcsin(2.0 * np.clip(q, 0, 1) - 1.0)
-
-    def _compress(self):
-        if self.means.size <= 1:
-            return
-        total = self.weights.sum()
-        new_means: list[float] = []
-        new_weights: list[float] = []
-        cum = 0.0
-        cur_m, cur_w = self.means[0], self.weights[0]
-        for m, w in zip(self.means[1:], self.weights[1:]):
-            q0 = cum / total
-            q1 = (cum + cur_w + w) / total
-            if self._k(np.array([q1]))[0] - self._k(np.array([q0]))[0] <= 1.0:
-                # merge into current centroid (weighted mean)
-                cur_m = (cur_m * cur_w + m * w) / (cur_w + w)
-                cur_w += w
-            else:
-                new_means.append(cur_m)
-                new_weights.append(cur_w)
-                cum += cur_w
-                cur_m, cur_w = m, w
-        new_means.append(cur_m)
-        new_weights.append(cur_w)
-        self.means = np.array(new_means)
-        self.weights = np.array(new_weights)
-
-    # -- queries -----------------------------------------------------------
-    def quantile(self, q: float) -> float:
-        if self.means.size == 0:
-            return float("nan")
-        if self.means.size == 1:
-            return float(self.means[0])
-        total = self.weights.sum()
-        target = q * total
-        # centroid cumulative midpoints
-        cum = np.cumsum(self.weights) - self.weights / 2.0
-        if target <= cum[0]:
-            return self._min if q <= 0 else float(
-                self._min + (self.means[0] - self._min) * target / max(cum[0], 1e-12)
-            )
-        if target >= cum[-1]:
-            rem = total - cum[-1]
-            return self._max if q >= 1 else float(
-                self.means[-1] + (self._max - self.means[-1])
-                * (target - cum[-1]) / max(rem, 1e-12)
-            )
-        i = int(np.searchsorted(cum, target)) - 1
-        frac = (target - cum[i]) / (cum[i + 1] - cum[i])
-        return float(self.means[i] + frac * (self.means[i + 1] - self.means[i]))
-
-    def cdf(self, x: float) -> float:
-        if self.means.size == 0:
-            return float("nan")
-        if x <= self._min:
-            return 0.0
-        if x >= self._max:
-            return 1.0
-        total = self.weights.sum()
-        cum = np.cumsum(self.weights) - self.weights / 2.0
-        i = int(np.searchsorted(self.means, x))
-        if i == 0:
-            return float(cum[0] * (x - self._min) / max(self.means[0] - self._min, 1e-12) / total)
-        if i >= self.means.size:
-            return float((cum[-1] + (total - cum[-1]) * (x - self.means[-1])
-                          / max(self._max - self.means[-1], 1e-12)) / total)
-        frac = (x - self.means[i - 1]) / max(self.means[i] - self.means[i - 1], 1e-12)
-        return float((cum[i - 1] + frac * (cum[i] - cum[i - 1])) / total)
 
 
 # ---------------------------------------------------------------------------
@@ -273,59 +101,3 @@ class BloomFilter:
     @classmethod
     def from_bytes(cls, m_bits: int, k: int, raw: bytes) -> "BloomFilter":
         return cls(m_bits, k, np.frombuffer(raw, dtype=np.uint64).copy())
-
-
-# ---------------------------------------------------------------------------
-# HyperLogLog (Flajolet et al. 2007, with the standard small-range
-# correction — public algorithm). Registers are a numpy uint8 array;
-# merge = element-wise max. Complements Spark's built-in
-# approx_count_distinct (HLL++) when the per-partition sketch OBJECT
-# must be stored (audit table) or merged across runs.
-# ---------------------------------------------------------------------------
-
-class HyperLogLog:
-    __slots__ = ("p", "m", "registers")
-
-    def __init__(self, p: int = 12, registers: np.ndarray | None = None):
-        self.p = p
-        self.m = 1 << p
-        self.registers = (registers if registers is not None
-                          else np.zeros(self.m, dtype=np.uint8))
-
-    def add_batch(self, values) -> "HyperLogLog":
-        import pandas as pd
-
-        h = pd.util.hash_pandas_object(
-            pd.Series(values).astype(str), index=False
-        ).to_numpy().astype(np.uint64)
-        idx = (h >> np.uint64(64 - self.p)).astype(np.int64)
-        rest = h << np.uint64(self.p)  # remaining 64-p bits, left-aligned
-        # rank = position of first set bit in the remaining bits (1-based),
-        # computed vectorized via float64 log2 of the left-aligned value
-        rank = np.where(
-            rest == 0, 64 - self.p + 1,
-            (64 - np.floor(np.log2(rest.astype(np.float64) + 0.5)) - 1 + 1)
-        ).astype(np.uint8)
-        np.maximum.at(self.registers, idx, rank)
-        return self
-
-    def merge(self, other: "HyperLogLog") -> "HyperLogLog":
-        assert self.p == other.p
-        return HyperLogLog(self.p, np.maximum(self.registers, other.registers))
-
-    def estimate(self) -> float:
-        m = float(self.m)
-        alpha = 0.7213 / (1.0 + 1.079 / m)
-        est = alpha * m * m / np.power(2.0, -self.registers.astype(np.float64)).sum()
-        if est <= 2.5 * m:  # small-range correction
-            zeros = int((self.registers == 0).sum())
-            if zeros:
-                return m * math.log(m / zeros)
-        return float(est)
-
-    def to_bytes(self) -> bytes:
-        return self.registers.tobytes()
-
-    @classmethod
-    def from_bytes(cls, p: int, raw: bytes) -> "HyperLogLog":
-        return cls(p, np.frombuffer(raw, dtype=np.uint8).copy())

@@ -120,3 +120,14 @@ def test_ledger_compaction(spark, tmp_path):
     after = ledger.committed().collect()
     key = lambda r: (r["partition_key"], r["run_id"])  # noqa: E731
     assert sorted(map(key, before)) == sorted(map(key, after))
+
+
+def test_unreadable_ledger_raises(spark, tmp_path):
+    """Only a missing ledger reads as empty; a corrupt one must not, or
+    every partition would be recomputed and appended again."""
+    assert AuditLedger(spark, str(tmp_path / "none")).committed().count() == 0
+    path = tmp_path / "audit_bad"
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        AuditLedger(spark, str(path)).committed()

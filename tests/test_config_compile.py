@@ -10,7 +10,7 @@ from anomaly_detection_spark.config import (
     compile_config,
     compile_detector,
 )
-from tests.conftest import series_df
+from tests.conftest import plan_counts, series_df
 
 
 def test_border_config_ladder(spark):
@@ -408,16 +408,6 @@ _PLAN_SUITE = [
 ]
 
 
-def _plan_counts(df):
-    """(FileScans, non-reused Exchanges) of ``df``'s physical plan as
-    planned, before adaptive execution could reuse any exchange."""
-    plan = df._jdf.queryExecution().executedPlan().toString().splitlines()
-    scans = sum("FileScan" in line for line in plan)
-    exchanges = sum("Exchange" in line and "ReusedExchange" not in line
-                    for line in plan)
-    return scans, exchanges
-
-
 @pytest.fixture(scope="module")
 def series_parquet(spark, tmp_path_factory):
     import numpy as np
@@ -442,7 +432,7 @@ def test_config_plan_is_linear_in_detectors(series_parquet, k):
     out = compile_config({"anomaly_detection_alg": list(algs),
                           "anomaly_detection_conf": list(confs)})(
         series_parquet)
-    scans, exchanges = _plan_counts(out)
+    scans, exchanges = plan_counts(out)
     assert scans <= k + 1, (k, scans)
     assert exchanges <= 2 * k, (k, exchanges)
     assert out.count() == series_parquet.count()
@@ -455,7 +445,7 @@ def test_combination_plan_is_linear_in_sub_detectors(series_parquet):
                           "anomaly_algorithms_configurations": list(confs),
                           "status_determiner": "OR()"},
         keys="series", order="ts", value="value")(series_parquet)
-    scans, exchanges = _plan_counts(comb)
+    scans, exchanges = plan_counts(comb)
     assert scans <= 4 and exchanges <= 6, (scans, exchanges)
     # the determiner folds the same per-detector verdicts compile_config
     # reports side by side

@@ -556,14 +556,25 @@ def test_repetition_multichar_literal_sep(spark):
         assert (r["n_lines"], r["n_distinct_lines"]) == (3, 2), fn.__name__
 
 
+def test_hash_unit_high_half_is_mixed(spark):
+    """Keys that differ by a multiple of 2^32 no longer collide."""
+    df = spark.range(0, 2000).select(
+        hash_unit(F.col("id"), seed=3).alias("u"),
+        hash_unit(F.col("id") + 2**32, seed=3).alias("u_hi"),
+        hash_unit(F.col("id") - 2**32, seed=3).alias("u_neg"))
+    rows = df.collect()
+    assert all(r["u"] != r["u_hi"] and r["u"] != r["u_neg"] for r in rows)
+
+
 def test_hash_unit_sql_matches_spark_for_negative_keys(spark):
-    """The SQL twin's sign-wrapped mod must equal Spark's pmod on
-    negative keys."""
+    """The SQL twin's sign-wrapped mod and high-half shift must equal
+    Spark's on negative keys and on keys outside [0, 2^32)."""
     import duckdb
 
     from anomaly_detection_spark.functions.sampling import hash_unit_sql
 
-    keys = [-1, -5, -4294967296, -4294967297, 0, 1, 17, 2**40]
+    keys = [-1, -5, -4294967296, -4294967297, 0, 1, 17, 2**40,
+            2**32 + 17, -(2**63), 2**63 - 1]
     df = spark.createDataFrame([(k,) for k in keys], "k bigint")
     sp = {r["k"]: r["u"] for r in
           df.select("k", hash_unit(F.col("k"), seed=9).alias("u")).collect()}
@@ -615,6 +626,22 @@ def test_stopword_candidates_threshold(spark):
     cands = {r["word"] for r in
              stopword_candidates(df, max_doc_frac=0.5).collect()}
     assert cands == {"the"}  # 3/4 docs > 0.5; everything else 1/4
+
+
+def test_vocab_default_n_docs_counts_distinct_ids(spark):
+    """Duplicate doc_id rows count once in the default N, as in doc_freq."""
+    from anomaly_detection_spark.functions.vocab import (
+        stopword_candidates, vocab_topk,
+    )
+
+    rows = [(0, "the cat"), (1, "the dog"), (2, "the fox"), (3, "owl")]
+    uniq = spark.createDataFrame(rows, "doc_id bigint, text string")
+    dup = spark.createDataFrame(rows + rows[:1] * 3, "doc_id bigint, text string")
+    idf = lambda df: {r["word"]: r["idf"] for r in vocab_topk(df, 10).collect()}  # noqa: E731
+    assert idf(dup) == pytest.approx(idf(uniq))
+    assert ({r["word"] for r in stopword_candidates(dup).collect()}
+            == {r["word"] for r in stopword_candidates(uniq).collect()}
+            == {"the"})
 
 
 def test_vocab_plan_shape(spark):

@@ -1,4 +1,4 @@
-"""Property-based tests (hypothesis) for the pure-python kernels — merge
+"""Property-based tests (hypothesis) for the merge kernels — merge
 associativity/commutativity, estimator bounds, ladder semantics. The
 reference has no property tests at all (SURVEY.md §5.1); these pin the
 algebraic laws the distributed execution RELIES on: any partitioning of
@@ -9,16 +9,11 @@ import math
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from anomaly_detection_spark.sketches import (
-    BloomFilter,
-    HyperLogLog,
-    TDigest,
-    welford_finalize,
-    welford_merge,
-    welford_update_batch,
-    welford_zero,
-)
+from anomaly_detection_spark.operators.stats import hll_distinct
+from anomaly_detection_spark.sketches import BloomFilter, welford_merge
+from tests.conftest import moments
 
 finite = st.floats(min_value=-1e9, max_value=1e9,
                    allow_nan=False, allow_infinity=False)
@@ -31,51 +26,23 @@ batches = st.lists(st.lists(finite, min_size=0, max_size=40),
 def test_welford_any_partitioning_same_result(parts):
     """Merging per-batch moments in ANY grouping equals the single pass."""
     flat = [v for p in parts for v in p]
-    single = welford_update_batch(welford_zero(), np.array(flat))
+    single = moments(flat)
     # left fold
-    left = welford_zero()
+    left = (0.0, 0.0, 0.0)
     for p in parts:
-        left = welford_merge(left, welford_update_batch(welford_zero(), np.array(p)))
+        left = welford_merge(left, moments(p))
     # pairwise tree fold
-    states = [welford_update_batch(welford_zero(), np.array(p)) for p in parts]
+    states = [moments(p) for p in parts]
     while len(states) > 1:
         states = [welford_merge(states[i], states[i + 1])
                   if i + 1 < len(states) else states[i]
                   for i in range(0, len(states), 2)]
-    for st_ in (left, states[0]):
-        n1, m1, v1, _ = welford_finalize(single)
-        n2, m2, v2, _ = welford_finalize(st_)
+    n1, m1, q1 = single
+    for n2, m2, q2 in (left, states[0]):
         assert n1 == n2
         if n1 > 0:
             assert math.isclose(m1, m2, rel_tol=1e-9, abs_tol=1e-6)
-            assert math.isclose(v1, v2, rel_tol=1e-6, abs_tol=1e-4)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.lists(finite, min_size=1, max_size=500),
-       st.floats(min_value=0.01, max_value=0.99))
-def test_tdigest_quantile_within_data_range(values, q):
-    d = TDigest.from_values(np.array(values))
-    got = d.quantile(q)
-    assert min(values) - 1e-9 <= got <= max(values) + 1e-9
-
-
-@settings(max_examples=20, deadline=None)
-@given(st.lists(st.lists(finite, min_size=1, max_size=200),
-                min_size=2, max_size=4))
-def test_tdigest_merge_commutative_median_stability(parts):
-    arrays = [np.array(p) for p in parts]
-    ab = TDigest(100)
-    for a in arrays:
-        ab = ab.merge(TDigest.from_values(a, 100))
-    ba = TDigest(100)
-    for a in reversed(arrays):
-        ba = ba.merge(TDigest.from_values(a, 100))
-    flat = np.concatenate(arrays)
-    exact = float(np.quantile(flat, 0.5))
-    span = float(flat.max() - flat.min()) or 1.0
-    assert abs(ab.quantile(0.5) - exact) <= 0.25 * span + 1e-6
-    assert abs(ba.quantile(0.5) - exact) <= 0.25 * span + 1e-6
+            assert math.isclose(q1 / n1, q2 / n2, rel_tol=1e-6, abs_tol=1e-4)
 
 
 @settings(max_examples=25, deadline=None)
@@ -89,16 +56,15 @@ def test_bloom_never_false_negative(keys):
 @settings(max_examples=25, deadline=None)
 @given(st.lists(st.text(min_size=1, max_size=12), min_size=1, max_size=300),
        st.integers(min_value=1, max_value=4))
-def test_hll_split_merge_equals_single_pass(keys, n_parts):
-    whole = HyperLogLog(10)
-    whole.add_batch(np.array(keys, dtype=object))
-    merged = HyperLogLog(10)
-    for part in np.array_split(np.array(keys, dtype=object), n_parts):
-        h = HyperLogLog(10)
-        if len(part):
-            h.add_batch(part)
-        merged = merged.merge(h)
-    assert (merged.registers == whole.registers).all()
+def test_hll_split_merge_equals_single_pass(spark, keys, n_parts):
+    """The per-part sketches hll_distinct returns union to the estimate of
+    one sketch over all keys."""
+    df = spark.createDataFrame([(i % n_parts, k) for i, k in enumerate(keys)],
+                               "part int, k string")
+    whole = hll_distinct(df, "k").first()["n_distinct_approx"]
+    merged = (hll_distinct(df, "k", "part")
+              .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch"))).first()[0])
+    assert merged == whole
 
 
 @settings(max_examples=60, deadline=None)

@@ -439,11 +439,9 @@ def test_ivf_topk_recall_and_exactness_at_full_probe(spark):
 
 def test_ks_exact_matches_digest_within_resolution(spark):
     """The exact distributed KS (range-partitioned prefix sums) agrees
-    with numpy on planted shifted samples, and the t-digest KS
-    approximation lands within the sketch's resolution of it."""
-    from anomaly_detection_spark.operators.drift import (
-        ks_exact, ks_from_digests, tdigest_of,
-    )
+    with numpy on planted shifted samples, and the KLL KS approximation
+    lands within the sketch's resolution of it."""
+    from anomaly_detection_spark.operators.drift import ks_check, ks_exact
 
     rng = np.random.default_rng(3)
     a = rng.normal(0.0, 1.0, 4000)
@@ -459,8 +457,7 @@ def test_ks_exact_matches_digest_within_resolution(spark):
     want = np.abs(fa - fb).max()
     assert abs(got - want) < 1e-12
 
-    approx = ks_from_digests(tdigest_of(dfa, "value"),
-                             tdigest_of(dfb, "value"))
+    approx, _ = ks_check(dfa, dfb, "value")
     assert abs(approx - want) < 0.02  # within sketch resolution
 
 

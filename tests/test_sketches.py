@@ -1,67 +1,32 @@
-"""Sketch math: merge exactness/associativity vs numpy ground truth."""
+"""Sketch math: merge exactness/associativity vs numpy ground truth, and
+the native HLL sketches hll_distinct returns."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from anomaly_detection_spark.sketches import (
-    BloomFilter,
-    TDigest,
-    welford_finalize,
-    welford_merge,
-    welford_update_batch,
-    welford_zero,
-)
+from anomaly_detection_spark.operators.stats import hll_distinct
+from anomaly_detection_spark.sketches import BloomFilter, welford_merge
+from tests.conftest import moments
 
 
 def test_welford_matches_numpy_and_merge_is_associative():
     rng = np.random.default_rng(7)
     data = rng.normal(10.0, 3.0, size=10_001)
-    # fold in uneven batches
-    chunks = np.split(data, [17, 400, 401, 5000, 9999])
-    states = [welford_update_batch(welford_zero(), c) for c in chunks]
+    # fold in uneven batches, one of them empty
+    chunks = np.split(data, [17, 400, 400, 401, 5000, 9999])
+    states = [moments(c) for c in chunks]
     left = states[0]
     for s in states[1:]:
         left = welford_merge(left, s)
     right = states[-1]
     for s in reversed(states[:-1]):
         right = welford_merge(s, right)
-    for st in (left, right):
-        n, mean, var_pop, var_samp = welford_finalize(st)
+    for n, mean, m2 in (left, right):
         assert n == len(data)
         assert mean == pytest.approx(data.mean(), rel=1e-12)
-        assert var_pop == pytest.approx(data.var(), rel=1e-9)
-        assert var_samp == pytest.approx(data.var(ddof=1), rel=1e-9)
-
-
-def test_welford_nan_and_empty():
-    st = welford_update_batch(welford_zero(), np.array([np.nan, 1.0, 3.0]))
-    n, mean, _, _ = welford_finalize(st)
-    assert n == 2 and mean == 2.0
-    assert welford_merge(welford_zero(), st) == st
-
-
-def test_tdigest_quantiles_close_to_exact():
-    rng = np.random.default_rng(0)
-    data = rng.lognormal(3.0, 1.0, size=50_000)
-    # distributed-style: 8 partition digests merged
-    parts = np.array_split(data, 8)
-    d = TDigest(200)
-    for p in parts:
-        d = d.merge(TDigest.from_values(p, 200))
-    assert len(d.means) < 500  # actually compressed
-    for q in (0.01, 0.25, 0.5, 0.75, 0.9, 0.99):
-        exact = np.quantile(data, q)
-        got = d.quantile(q)
-        assert got == pytest.approx(exact, rel=0.05), q
-
-
-def test_tdigest_cdf_roundtrip():
-    data = np.arange(10_000, dtype=float)
-    d = TDigest.from_values(data)
-    for q in (0.1, 0.5, 0.9):
-        x = d.quantile(q)
-        assert d.cdf(x) == pytest.approx(q, abs=0.02)
-    assert d.cdf(-1.0) == 0.0 and d.cdf(1e9) == 1.0
+        assert m2 / n == pytest.approx(data.var(), rel=1e-9)
+        assert m2 / (n - 1) == pytest.approx(data.var(ddof=1), rel=1e-9)
 
 
 def test_bloom_no_false_negatives_and_low_fp():
@@ -82,26 +47,20 @@ def test_bloom_no_false_negatives_and_low_fp():
     assert back.contains_batch(np.array(keys[:100])).all()
 
 
-def test_hll_accuracy_and_merge():
-    from anomaly_detection_spark.sketches import HyperLogLog
+def test_hll_accuracy_and_merge(spark):
+    def sketch(lo, hi):
+        df = spark.range(lo, hi).select(F.format_string("x%d", "id").alias("k"))
+        return hll_distinct(df, "k").first()
 
-    a = HyperLogLog(12)
-    b = HyperLogLog(12)
-    a.add_batch(np.array([f"x{i}" for i in range(60_000)]))
-    b.add_batch(np.array([f"x{i}" for i in range(30_000, 90_000)]))  # overlap
-    merged = a.merge(b)
-    est = merged.estimate()
-    assert abs(est - 90_000) / 90_000 < 0.05
-    # merge == single-pass build
-    c = HyperLogLog(12).add_batch(np.array([f"x{i}" for i in range(90_000)]))
-    assert abs(merged.estimate() - c.estimate()) / c.estimate() < 0.03
-    # serialization roundtrip
-    back = HyperLogLog.from_bytes(12, merged.to_bytes())
-    assert back.estimate() == merged.estimate()
+    a, b = sketch(0, 60_000), sketch(30_000, 90_000)  # overlap
+    # the returned sketches merge: union == single-pass build
+    both = spark.createDataFrame([(a["sketch"],), (b["sketch"],)], "s binary")
+    merged = both.agg(F.hll_sketch_estimate(F.hll_union_agg("s"))).first()[0]
+    assert abs(merged - 90_000) / 90_000 < 0.05
+    single = sketch(0, 90_000)["n_distinct_approx"]
+    assert abs(merged - single) / single < 0.03
 
 
-def test_hll_small_range():
-    from anomaly_detection_spark.sketches import HyperLogLog
-
-    h = HyperLogLog(12).add_batch(np.array(["a", "b", "c", "a"]))
-    assert abs(h.estimate() - 3) < 0.5
+def test_hll_small_range(spark):
+    df = spark.createDataFrame([("a",), ("b",), ("c",), ("a",), (None,)], "k string")
+    assert abs(hll_distinct(df, "k").first()["n_distinct_approx"] - 3) < 0.5

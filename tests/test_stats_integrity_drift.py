@@ -11,11 +11,10 @@ from anomaly_detection_spark.corpus import (
 )
 from anomaly_detection_spark.operators.drift import (
     ks_check,
-    ks_from_digests,
+    ks_sketches,
     partition_stat_drift,
     psi_categorical,
     psi_numeric,
-    tdigest_of,
 )
 from anomaly_detection_spark.operators.integrity import (
     duplicate_keys,
@@ -29,9 +28,9 @@ from anomaly_detection_spark.operators.mvoutlier import (
 )
 from anomaly_detection_spark.operators.stats import (
     column_profile,
-    column_profile_salted,
-    welford_profile,
+    hll_distinct,
 )
+from tests.conftest import plan_counts, plan_lines
 
 N = 25_000
 
@@ -45,26 +44,21 @@ def corpus(spark):
     return df
 
 
-def test_column_profile_matches_welford_profile(spark, corpus):
-    b = column_profile(corpus, "content_len", ["lang"]).orderBy("lang").collect()
-    w = {r["part_key"]: r for r in welford_profile(corpus, "content_len", "lang").collect()}
-    assert len(b) == len(w)
-    for row in b:
-        wr = w[row["lang"]]
-        assert wr["n"] == row["n"]
-        assert wr["mean"] == pytest.approx(row["mean"], rel=1e-9)
-        assert wr["stddev_samp"] == pytest.approx(row["stddev_samp"], rel=1e-9)
-        assert wr["min"] == row["min"] and wr["max"] == row["max"]
-
-
-def test_salted_profile_matches_plain(spark, corpus):
-    plain = {r["lang"]: r for r in column_profile(corpus, "content_len", ["lang"]).collect()}
-    salted = column_profile_salted(corpus, "content_len", ["lang"]).collect()
-    for r in salted:
-        p = plain[r["lang"]]
-        assert r["n"] == p["n"]
-        assert r["mean"] == pytest.approx(p["mean"], rel=1e-9)
-        assert r["stddev_samp"] == pytest.approx(p["stddev_samp"], rel=1e-9)
+def test_column_profile_matches_numpy(spark, corpus):
+    """Per group, nulls included: n counts every row, the moments and
+    extremes only the non-null values."""
+    df = corpus.withColumn("content_len", F.when(
+        F.col("row_id") % 7 == 0, None).otherwise(F.col("content_len")))
+    got = {r["lang"]: r for r in column_profile(df, "content_len", ["lang"]).collect()}
+    pdf = df.select("lang", "content_len").toPandas()
+    assert set(got) == set(pdf["lang"])
+    for lang, g in pdf.groupby("lang", dropna=False):
+        r, v = got[lang], g["content_len"].dropna().to_numpy()
+        assert r["n"] == len(g) and r["n_null"] == len(g) - len(v)
+        assert r["mean"] == pytest.approx(v.mean(), rel=1e-9)
+        assert r["stddev_samp"] == pytest.approx(v.std(ddof=1), rel=1e-9)
+        assert r["var_pop"] == pytest.approx(v.var(), rel=1e-9)
+        assert r["min"] == v.min() and r["max"] == v.max()
 
 
 def test_uniqueness_finds_planted_dups(spark, corpus):
@@ -91,26 +85,15 @@ def test_referential_exact_and_bloom_agree(spark, corpus):
     assert e == b == expected_violation_ids(N)["bad_lang"]
 
 
-def test_tdigest_spark_quantiles(spark, corpus):
-    d = tdigest_of(corpus, "content_len")
-    exact = corpus.select(
-        F.expr("percentile(content_len, array(0.25, 0.5, 0.9))").alias("p")
-    ).first()["p"]
-    for q, e in zip((0.25, 0.5, 0.9), exact):
-        assert d.quantile(q) == pytest.approx(e, rel=0.06)
-
-
 def test_ks_same_vs_shifted(spark):
     rng = np.random.default_rng(1)
     a = spark.createDataFrame([(float(x),) for x in rng.normal(0, 1, 4000)], "v double")
     b = spark.createDataFrame([(float(x),) for x in rng.normal(0, 1, 4000)], "v double")
     c = spark.createDataFrame([(float(x),) for x in rng.normal(2, 1, 4000)], "v double")
-    ks_same = ks_from_digests(tdigest_of(a, "v"), tdigest_of(b, "v"))
-    ks_diff = ks_from_digests(tdigest_of(a, "v"), tdigest_of(c, "v"))
+    ks_same, code_same = ks_check(a, b, "v", UL=0.2, warning_stages=(0.5,))
+    ks_diff, code_diff = ks_check(a, c, "v", UL=0.2, warning_stages=(0.5,))
     assert ks_same < 0.08
     assert ks_diff > 0.5
-    _, code_same = ks_check(a, b, "v", UL=0.2, warning_stages=(0.5,))
-    _, code_diff = ks_check(a, c, "v", UL=0.2, warning_stages=(0.5,))
     assert code_same == 1 and code_diff == -1
 
 
@@ -220,11 +203,31 @@ def test_core_samples_ignore_row_order():
 
 
 def test_hll_distinct_spark(spark, corpus):
-    from anomaly_detection_spark.operators.stats import hll_distinct
-
     got = {r["part_key"]: r["n_distinct_approx"]
            for r in hll_distinct(corpus, "path", "lang").collect()}
     exact = {r["lang"]: r["d"] for r in corpus.groupBy("lang").agg(
         F.countDistinct("path").alias("d")).collect()}
     for lang, d in exact.items():
         assert abs(got[lang] - d) / max(d, 1) < 0.08, (lang, got[lang], d)
+
+
+PYTHON_STAGES = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython",
+                 "BatchEvalPython")
+
+
+def test_stats_and_drift_plan_no_python_stage(spark, corpus):
+    half = F.col("row_id") % 2 == 0
+    plans = {
+        "profile": column_profile(corpus, "content_len"),
+        "profile_keyed": column_profile(corpus, "content_len", ["lang"]),
+        "hll": hll_distinct(corpus, "path", "lang"),
+        "ks_sketches": ks_sketches(corpus.filter(half), corpus.filter(~half),
+                                   "content_len"),
+        "psi": psi_numeric(corpus.filter(half), corpus.filter(~half),
+                           "content_len", lo=0, hi=4000),
+    }
+    for name, df in plans.items():
+        plan = "\n".join(plan_lines(df))
+        assert not [s for s in PYTHON_STAGES if s in plan], (name, plan)
+    # the keyed profile is one hash aggregate: partial, one shuffle, final
+    assert plan_counts(plans["profile_keyed"])[1] == 1
