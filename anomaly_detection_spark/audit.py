@@ -22,6 +22,8 @@ a torn row). On a real cluster the same writer targets an Iceberg table
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 import uuid
 
@@ -49,6 +51,7 @@ class AuditLedger:
         """Partition keys already committed (empty frame if no ledger yet).
         Any other read failure raises: reading an unreadable ledger as
         empty would recompute every partition and append duplicate rows."""
+        self._recover()
         try:
             return self.spark.read.format(self.fmt).load(self.path)
         except AnalysisException as e:
@@ -70,21 +73,32 @@ class AuditLedger:
         """Rewrite the ledger into ``target_files`` files (append mode
         creates one file set per commit; long-running ledgers accumulate
         small files). Returns the row count. On Iceberg this maps to
-        rewrite_data_files; here: read -> coalesce -> atomic swap via a
-        temp directory."""
-        import shutil
-        import tempfile
-
+        rewrite_data_files; here: write the compacted copy to a sibling
+        directory, rename the old ledger aside, rename the copy in, and
+        only then delete the old one. Siblings share a filesystem, so both
+        renames are atomic; a crash between them leaves the whole ledger
+        aside, where :meth:`committed` finds it."""
         df = self.committed()
         n = df.count()
-        tmp = tempfile.mkdtemp(prefix="audit_compact_")
-        try:
-            df.coalesce(target_files).write.format(self.fmt)               .mode("overwrite").save(tmp + "/data")
-            shutil.rmtree(self.path)
-            shutil.move(tmp + "/data", self.path)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        path = self.path.rstrip("/")
+        new, old = path + ".compact", path + ".old"
+        shutil.rmtree(new, ignore_errors=True)
+        df.coalesce(target_files).write.format(self.fmt).save(new)
+        os.replace(path, old)
+        os.replace(new, path)
+        shutil.rmtree(old)
         return n
+
+    def _recover(self) -> None:
+        """Finish a compaction that stopped after renaming the old ledger
+        aside: put it back if the new one never arrived, else drop it."""
+        path = self.path.rstrip("/")
+        old = path + ".old"
+        if os.path.isdir(old):
+            if os.path.exists(path):
+                shutil.rmtree(old)
+            else:
+                os.replace(old, path)
 
 
 def run_partitioned_checks(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.sampling import bounded_sample_rows
+from anomaly_detection_spark.session import group_apply
 
 
 def _norm(c):
@@ -282,7 +283,8 @@ def ivf_topk(
     dedup + per-pair vector fetch moved 13M rows and ~6 GB of vectors at
     1024 queries x 200k corpus (24s); this shape runs the same search in
     ~3s and scales linearly in corpus size with a single narrow shuffle
-    (tools/ann_bench.py). Recall is tuned with n_probe/n_cells."""
+    (BENCH/BASELINE.md, "Round-4: ANN operating points"). Recall is
+    tuned with n_probe/n_cells."""
     C = fit_ivf_quantizer(corpus, vec_col, n_cells=n_cells,
                           train_sample=train_sample,
                           kmeans_iters=kmeans_iters, seed=seed)
@@ -331,15 +333,8 @@ def ivf_topk(
         return _group_topk(pdf, js, qids, Qn, query_id=query_id,
                            id_col=id_col, vec_col=vec_col, k=k)
 
-    # explicit fan-out pin: the per-cell groups are Python/GEMM work and
-    # the shuffle is small, so AQE would coalesce them (PLANS.md lesson 8)
-    from anomaly_detection_spark.session import shuffle_partitions
-    n_parts = min(max(len(probed), 1), shuffle_partitions(spark))
-    partials = (
-        indexed.repartition(n_parts, "cell")
-        .groupBy("cell")
-        .applyInPandas(cell_topk, schema=out_schema)
-    )
+    partials = group_apply(indexed, ["cell"], cell_topk, out_schema,
+                           max_groups=len(probed))
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(id_col))
     return (
         partials.withColumn("rank", F.row_number().over(w))
@@ -370,7 +365,8 @@ def lsh_topk(
     then a window merges — lossless for global top-k.
     Candidate (query, id) pairs never materialize (the previous
     pair-join + per-pair vector fetch took 11-50s at 1024 queries x 200k
-    corpus; this shape ~3-4s, tools/ann_bench.py)."""
+    corpus; this shape ~3-4s, BENCH/BASELINE.md "Round-4: ANN operating
+    points")."""
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     rng = np.random.default_rng(seed)
@@ -438,13 +434,9 @@ def lsh_topk(
         return _group_topk(pdf, js, qids, Qn, query_id=query_id,
                            id_col=id_col, vec_col=vec_col, k=k)
 
-    # explicit fan-out pin against AQE coalescing (PLANS.md lesson 8)
-    from anomaly_detection_spark.session import shuffle_partitions
-    n_parts = min(max(len(bucket_queries), 1), shuffle_partitions(spark))
     partials = (
-        members.repartition(n_parts, "tbl", "bkt")
-        .groupBy("tbl", "bkt")
-        .applyInPandas(bucket_topk, schema=out_schema)
+        group_apply(members, ["tbl", "bkt"], bucket_topk, out_schema,
+                    max_groups=len(bucket_queries))
         # a pair matching in several tables is scored by DIFFERENT
         # per-bucket GEMMs whose summation order may differ in the last
         # ulp — max over the duplicates (not dropDuplicates, which keeps

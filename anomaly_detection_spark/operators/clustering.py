@@ -25,10 +25,15 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from anomaly_detection_spark.operators.mvoutlier import training_rows
+from anomaly_detection_spark.operators.mvoutlier import (
+    epoch_explode, training_rows,
+)
+from anomaly_detection_spark.operators.sequential import (
+    _grouped, _out_schema, _per_series,
+)
 from anomaly_detection_spark.sampling import bounded_sample_rows
+from anomaly_detection_spark.session import group_apply
 
 
 def _core_samples(X: np.ndarray, eps: float, min_samples: int,
@@ -69,21 +74,10 @@ def clustering_check_grouped(
         out_pdf[out] = np.where(dist >= treshold, -1, 1).astype(np.int32)
         return out_pdf
 
-    in_schema = df.select(*(list(keys_l) + list(extra_cols))).schema
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    ) + f", min_core_dist double, {out} int"
-    return (
-        df.select(*cols)
-        # explicit-count repartition: AQE would coalesce these CPU-bound
-        # python-fit groups onto few tasks (tiny shuffle bytes; PLANS.md
-        # lesson 8) — the count pins the fan-out and still satisfies the
-        # groupBy's clustered distribution
-        .repartition(df.sparkSession.sparkContext.defaultParallelism,
-                     *[F.col(k) for k in keys_l])
-        .groupBy(*keys_l)
-        .applyInPandas(fn, schema=schema)
-    )
+    return group_apply(
+        df.select(*cols), keys_l, fn,
+        _out_schema(df, list(keys_l) + list(extra_cols),
+                    f"min_core_dist double, {out} int"))
 
 
 def clustering_retrain_check(
@@ -144,33 +138,9 @@ def clustering_retrain_check(
     seeded = 0 if mem0 is None else len(mem0)
     first = max(R, int(S) - seeded)
 
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys_l).orderBy(order)
-    base = df.select(*cols, *feats).withColumn("_rn", F.row_number().over(w))
-    rn = F.col("_rn").cast("double")
-    score_e = F.when(F.col("_rn") <= first, F.lit(0)).otherwise(
-        F.ceil((rn - first) / R).cast("int"))
-    # train epochs k: fire F_k = first + (k-1)R with F_k - S < rn <= F_k
-    klo = F.greatest(F.lit(1), (F.ceil((rn - first) / R) + 1).cast("int"))
-    khi = F.ceil((rn + S - first) / R).cast("int")
-    ks = F.when(khi >= klo, F.sequence(klo, khi)) \
-        .otherwise(F.array().cast("array<int>"))
-    # the transform lambda is interpreted, but over a <= 1+ceil(S/R)-
-    # element array per row (3 here) — PLANS.md lesson #1 scopes HOFs as
-    # fine at that size, and the alternative (union of a native score
-    # frame and a native exploded train frame) recomputes the window
-    # scan+shuffle+sort twice, which measured far worse. Same shape as
-    # the round-2-approved iforest_retrain encoding.
-    roles = F.concat(
-        F.array(F.struct(score_e.alias("e"), F.lit(0).alias("t"))),
-        F.transform(ks, lambda k: F.struct(k.cast("int").alias("e"),
-                                           F.lit(1).alias("t"))),
-    )
-    exploded = base.select(
-        *cols, *feats, "_rn", F.explode(roles).alias("_er")
-    ).select(*cols, *feats, "_rn",
-             F.col("_er.e").alias("_epoch"), F.col("_er.t").alias("_train"))
+    # iforest_retrain_check's role explosion; `first` counts the seeded rows
+    exploded = epoch_explode(df, keys_l, cols, feats, order,
+                             first=first, R=R, S=int(S))
 
     out_cols = list(cols) + ["min_core_dist", "epoch", out]
 
@@ -206,19 +176,9 @@ def clustering_retrain_check(
         o[out] = np.where(d >= treshold, -1, 1).astype(np.int32)
         return o[out_cols]
 
-    from anomaly_detection_spark.operators.sequential import _out_schema
-
-    schema = _out_schema(df, cols,
-                         f"min_core_dist double, epoch int, {out} int")
-    # explicit-count repartition: the per-(series, epoch) python fit is
-    # CPU-bound on tiny shuffle bytes, so AQE would coalesce the groups
-    # onto few tasks (PLANS.md lesson 8)
-    n_part = exploded.sparkSession.sparkContext.defaultParallelism
-    return (
-        exploded.repartition(n_part, *keys_l, "_epoch")
-        .groupBy(*keys_l, "_epoch")
-        .applyInPandas(lambda pdf: fit_score(pdf), schema=schema)
-    )
+    return group_apply(
+        exploded, [*keys_l, "_epoch"], fit_score,
+        _out_schema(df, cols, f"min_core_dist double, epoch int, {out} int"))
 
 
 def _clustering_retrain_sequential(
@@ -229,10 +189,6 @@ def _clustering_retrain_sequential(
     """Unbounded-memory form (samples_for_retrain=None): the train buffer
     is everything seen so far, so epochs are computed per series (Python
     loop over EPOCHS, never rows)."""
-    from anomaly_detection_spark.operators.sequential import (
-        _grouped, _out_schema, _per_series,
-    )
-
     cols = list(keys_l) + [order] + list(extra_cols)
 
     def one(g: pd.DataFrame) -> pd.DataFrame:

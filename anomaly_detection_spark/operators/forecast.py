@@ -31,6 +31,7 @@ from anomaly_detection_spark.operators.sequential import (
     _out_schema,
     _per_series,
 )
+from anomaly_detection_spark.session import group_apply
 
 
 def _design(t: np.ndarray, period: float, harmonics: int,
@@ -244,10 +245,6 @@ def forecast_retrain_check(
                  changepoint_ridge=changepoint_ridge, z=z)
     band_cols = "yhat double, yhat_lower double, yhat_upper double"
 
-    from anomaly_detection_spark.operators.sequential import (
-        _grouped, _out_schema, _per_series,
-    )
-
     schema = _out_schema(df.select(*cols), cols,
                          f"{band_cols}, epoch int, {out} int")
 
@@ -325,10 +322,4 @@ def forecast_retrain_check(
         return o[list(cols) + ["yhat", "yhat_lower", "yhat_upper",
                                "epoch", out]]
 
-    # fan-out pin (PLANS.md lesson 8): per-epoch OLS is Python work
-    n_part = exploded.sparkSession.sparkContext.defaultParallelism
-    return (
-        exploded.repartition(n_part, *keys_l, "_epoch")
-        .groupBy(*keys_l, "_epoch")
-        .applyInPandas(fit_score, schema=schema)
-    )
+    return group_apply(exploded, [*keys_l, "_epoch"], fit_score, schema)

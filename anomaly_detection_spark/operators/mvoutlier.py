@@ -26,7 +26,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.operators.sequential import (
+    _grouped, _out_schema, _per_series,
+)
 from anomaly_detection_spark.sampling import bounded_sample_rows
+from anomaly_detection_spark.session import group_apply
 
 
 def _harmonic(n: float) -> float:
@@ -263,28 +267,18 @@ def iforest_check(
         out_pdf[out] = np.where(s > thr, -1, 1).astype(np.int32)
         return out_pdf
 
-    in_schema = df.select(*(list(keys_l) + list(extra_cols))).schema
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    ) + f", score double, {out} int"
-    return (
-        df.select(*cols)
-        # explicit-count repartition: AQE would coalesce these CPU-bound
-        # python-fit groups onto few tasks (tiny shuffle bytes; PLANS.md
-        # lesson 8) — the count pins the fan-out and still satisfies the
-        # groupBy's clustered distribution
-        .repartition(df.sparkSession.sparkContext.defaultParallelism,
-                     *[F.col(k) for k in keys_l])
-        .groupBy(*keys_l)
-        .applyInPandas(fn, schema=schema)
-    )
+    return group_apply(
+        df.select(*cols), keys_l, fn,
+        _out_schema(df, list(keys_l) + list(extra_cols),
+                    f"score double, {out} int"))
 
 
 def epoch_explode(df: DataFrame, keys_l, cols, feats, order: str, *,
                   first: int, R: int, S: int) -> DataFrame:
     """The rolling-retrain role explosion shared by
-    :func:`iforest_retrain_check` and
-    ``forecast.forecast_retrain_check``: retrain fires are deterministic
+    :func:`iforest_retrain_check`, ``clustering.clustering_retrain_check``,
+    ``forecast.forecast_retrain_check`` and ``neural.gan_retrain_check``:
+    retrain fires are deterministic
     given (first, R, S) — fire F_k = first + (k-1)R, trained on the
     trailing min(S, F_k) rows, scoring rows F_k+1..F_k+R — so each row
     explodes into its score epoch plus the <= ceil(S/R) train epochs
@@ -304,6 +298,11 @@ def epoch_explode(df: DataFrame, keys_l, cols, feats, order: str, *,
     khi = F.ceil((rn + S - first) / R).cast("int")
     ks = F.when(khi >= klo, F.sequence(klo, khi)) \
         .otherwise(F.array().cast("array<int>"))
+    # the transform lambda is interpreted, but over a <= 1+ceil(S/R)-
+    # element array per row — PLANS.md lesson 1 scopes HOFs as fine at
+    # that size, and a union of a native score frame and a native
+    # exploded train frame recomputes the window scan+shuffle+sort twice,
+    # which measured far worse
     roles = F.concat(
         F.array(F.struct(score_e.alias("e"), F.lit(0).alias("t"))),
         F.transform(ks, lambda k: F.struct(k.cast("int").alias("e"),
@@ -383,20 +382,9 @@ def iforest_retrain_check(
         o[out] = np.where(s > score_threshold, -1, 1).astype(np.int32)
         return o[list(cols) + ["score", "epoch", out]]
 
-    from anomaly_detection_spark.operators.sequential import _out_schema
-
-    schema = _out_schema(df, cols, f"score double, epoch int, {out} int")
-    # explicit-count repartition on the group keys: the per-group python
-    # fit is CPU-bound on tiny shuffle bytes, so AQE's coalescing would
-    # merge these groups into one task (measured: 22s -> ~2s at local[32]
-    # with the fan-out pinned); a fixed numPartitions exchange satisfies
-    # the groupBy's clustered distribution and is not coalesced
-    n_part = exploded.sparkSession.sparkContext.defaultParallelism
-    return (
-        exploded.repartition(n_part, *keys_l, "_epoch")
-        .groupBy(*keys_l, "_epoch")
-        .applyInPandas(lambda pdf: fit_score(pdf), schema=schema)
-    )
+    return group_apply(
+        exploded, [*keys_l, "_epoch"], fit_score,
+        _out_schema(df, cols, f"score double, epoch int, {out} int"))
 
 
 def _iforest_retrain_sequential(
@@ -407,10 +395,6 @@ def _iforest_retrain_sequential(
     """Unbounded-memory (samples_for_retrain=None) form: train window =
     everything before the fire, so epochs are computed per series (Python
     loop over EPOCHS, never rows)."""
-    from anomaly_detection_spark.operators.sequential import (
-        _grouped, _out_schema, _per_series,
-    )
-
     cols = list(keys_l) + [order] + list(extra_cols)
 
     def one(g: pd.DataFrame) -> pd.DataFrame:
@@ -480,21 +464,10 @@ def pca_iforest_check(
         out_pdf[out] = np.where(s > thr, -1, 1).astype(np.int32)
         return out_pdf
 
-    in_schema = df.select(*(list(keys_l) + list(extra_cols))).schema
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    ) + f", score double, {out} int"
-    return (
-        df.select(*cols)
-        # explicit-count repartition: AQE would coalesce these CPU-bound
-        # python-fit groups onto few tasks (tiny shuffle bytes; PLANS.md
-        # lesson 8) — the count pins the fan-out and still satisfies the
-        # groupBy's clustered distribution
-        .repartition(df.sparkSession.sparkContext.defaultParallelism,
-                     *[F.col(k) for k in keys_l])
-        .groupBy(*keys_l)
-        .applyInPandas(fn, schema=schema)
-    )
+    return group_apply(
+        df.select(*cols), keys_l, fn,
+        _out_schema(df, list(keys_l) + list(extra_cols),
+                    f"score double, {out} int"))
 
 
 def recon_drift_check(
@@ -531,9 +504,6 @@ def recon_drift_check(
     bc = spark.sparkContext.broadcast((mu, comps))
 
     from anomaly_detection_spark.operators.neural import ewm_threshold
-    from anomaly_detection_spark.operators.sequential import (
-        _grouped, _out_schema, _per_series,
-    )
 
     cols = list(keys_l) + [order] + list(extra_cols)
 
@@ -614,18 +584,7 @@ def codisp_check(
         out_pdf[out] = np.where(s >= threshold, -1, 1).astype(np.int32)
         return out_pdf
 
-    in_schema = df.select(*(list(keys_l) + list(extra_cols))).schema
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    ) + f", codisp double, {out} int"
-    return (
-        df.select(*cols)
-        # explicit-count repartition: AQE would coalesce these CPU-bound
-        # python-fit groups onto few tasks (tiny shuffle bytes; PLANS.md
-        # lesson 8) — the count pins the fan-out and still satisfies the
-        # groupBy's clustered distribution
-        .repartition(df.sparkSession.sparkContext.defaultParallelism,
-                     *[F.col(k) for k in keys_l])
-        .groupBy(*keys_l)
-        .applyInPandas(fn, schema=schema)
-    )
+    return group_apply(
+        df.select(*cols), keys_l, fn,
+        _out_schema(df, list(keys_l) + list(extra_cols),
+                    f"codisp double, {out} int"))

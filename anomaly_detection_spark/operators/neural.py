@@ -39,6 +39,7 @@ from anomaly_detection_spark.codes import (
     ERROR_CODE, OK_CODE, UNDEFINED_CODE, WARNING_CODE,
 )
 from anomaly_detection_spark.sampling import bounded_sample_rows
+from anomaly_detection_spark.session import group_apply
 
 __all__ = [
     "fit_autoencoder", "fit_trend_classifier", "mlp_predict",
@@ -530,17 +531,10 @@ def gan_retrain_check(
         o["recon_err"] = ((mlp_predict(w, ae_acts, Xs) - Xs) ** 2).mean(axis=1)
         return o[list(cols) + ["_rn", "epoch", "recon_err"]]
 
-    from anomaly_detection_spark.session import shuffle_partitions
-    n_parts = shuffle_partitions(df.sparkSession)
-    err_schema = _out_schema(df.select(*cols), cols,
-                             "_rn int, epoch int, recon_err double")
-    # explicit fan-out pin: per-group AE fits are Python-CPU-heavy on
-    # tiny shuffle bytes (PLANS.md lesson 8)
-    scored = (
-        exploded.repartition(n_parts, *keys_l, "_epoch")
-        .groupBy(*keys_l, "_epoch")
-        .applyInPandas(fit_score, schema=err_schema)
-    )
+    scored = group_apply(
+        exploded, [*keys_l, "_epoch"], fit_score,
+        _out_schema(df.select(*cols), cols,
+                    "_rn int, epoch int, recon_err double"))
 
     # pass 2: the moving threshold is sequential over each series' error
     # sequence (continuous across retrains) — tiny per-series vector work

@@ -346,7 +346,7 @@ def rrcf_stream_check(
     single-core-bounded per series: ~8.3k points/s at dim 1 (univariate
     fast path; ~3.4k at dim 4) once the tree_size=128 window is FULL,
     ~25k points/s in the short-series regime where trees never fill
-    (measured, tools/rrcf_bench.py; see BENCH/BASELINE.md) — stride
+    (measured; BENCH/BASELINE.md, "Round-4: RRCF hot-series bound") — stride
     divides that wall by ~k at the cost of verdict coverage."""
     from anomaly_detection_spark.operators.sequential import (
         _grouped, _out_schema, _per_series,

@@ -9,9 +9,9 @@ kernels (``groupby().ewm/rolling/shift/cumcount``) — zero per-row Python,
 per the north rule.
 
 Scale design: Spark groups are SERIES BUCKETS (``pmod(hash(keys),
-n_buckets)``), not individual series. A million tiny series would pay
+SERIES_BUCKETS)``), not individual series. A million tiny series would pay
 applyInPandas' per-group Arrow overhead a million times; bucketing bounds
-the task count at ``n_buckets`` while each bucket processes its series
+the task count at ``SERIES_BUCKETS`` while each bucket processes its series
 through one vectorized pandas pass. One hash shuffle either way.
 """
 
@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.codes import UNDEFINED_CODE  # noqa: F401 (API)
+from anomaly_detection_spark.session import group_apply
 
 SERIES_BUCKETS = 64
 
@@ -40,8 +41,7 @@ def _ladder_codes_np(vn: np.ndarray, warning_stages: Sequence[float]) -> np.ndar
     return code
 
 
-def _grouped(df: DataFrame, keys, order: str, fn, schema: str,
-             n_buckets: int = SERIES_BUCKETS) -> DataFrame:
+def _grouped(df: DataFrame, keys, order: str, fn, schema: str) -> DataFrame:
     """Bucket series -> applyInPandas. ``fn`` receives a frame sorted by
     (keys, order) possibly containing MANY series and must keep row order."""
     keys = keys if isinstance(keys, (list, tuple)) else [keys]
@@ -53,23 +53,10 @@ def _grouped(df: DataFrame, keys, order: str, fn, schema: str,
 
     bucketed = df.withColumn(
         "_bkt", F.pmod(F.xxhash64(*[F.col(k) for k in keys]),
-                       F.lit(n_buckets))
+                       F.lit(SERIES_BUCKETS))
     )
-    # EXPLICIT numbered repartition, not a bare groupBy exchange: AQE's
-    # coalescePartitions sizes post-shuffle partitions by BYTES (64 MB
-    # advisory) and knows nothing about downstream Python cost, so at
-    # small shuffle volumes it collapsed every applyInPandas stage to
-    # ONE task — measured 5.9s single-task vs 0.9s parallel on the RRCF
-    # kernel (25k rows is ~2 MB of shuffle but ~5s of Python). A
-    # user-specified repartition(n, col) is exempt from AQE coalescing,
-    # and groupBy on the same key reuses the partitioning (no second
-    # exchange). At real scale the bytes are big enough that AQE would
-    # not coalesce — this pins the Python-cost-aware parallelism at
-    # every scale.
-    from anomaly_detection_spark.session import shuffle_partitions
-    n_parts = min(n_buckets, shuffle_partitions(df.sparkSession))
-    bucketed = bucketed.repartition(n_parts, "_bkt")
-    return bucketed.groupBy("_bkt").applyInPandas(wrapper, schema=schema)
+    return group_apply(bucketed, ["_bkt"], wrapper, schema,
+                       max_groups=SERIES_BUCKETS)
 
 
 def _out_schema(df: DataFrame, cols, extra: str) -> str:

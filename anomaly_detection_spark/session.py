@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 MAX_DRIVER_MB = 16 * 1024
@@ -77,13 +77,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def shuffle_partitions(spark: SparkSession) -> int:
-    """spark.sql.shuffle.partitions as an int, tolerating platforms that
-    set it to a non-numeric value ('auto' under auto-optimized shuffle):
-    the fan-out pins only need a sane upper bound, so fall back to the
-    cluster's default parallelism there."""
-    v = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        return int(v)
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
+def group_apply(df: DataFrame, group_cols, fn, schema, *,
+                max_groups: int | None = None) -> DataFrame:
+    """Pandas grouped map of ``fn`` over ``group_cols`` (``groupBy``, then
+    ``applyInPandas``) with its fan-out pinned to
+    ``min(max_groups, defaultParallelism)`` tasks. Every grouped pandas
+    stage goes through here.
+
+    AQE's coalescePartitions sizes post-shuffle partitions by BYTES
+    (64 MB advisory) and knows nothing of the downstream Python cost, so
+    at small shuffle volumes it collapsed every applyInPandas stage to
+    ONE task: measured 5.9 s single-task vs 0.9 s parallel on the RRCF
+    kernel, where 25k rows are ~2 MB of shuffle but ~5 s of Python
+    (PLANS.md lesson 8). A ``repartition(n, cols)`` with an explicit
+    count is exempt from coalescing, and the groupBy on the same columns
+    reuses its partitioning (no second exchange). The per-group work is
+    Python CPU, which scales with cores, so ``n`` is the core count,
+    never more than the number of groups (``max_groups``)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if max_groups:
+        n = min(n, max_groups)
+    return (df.repartition(n, *group_cols).groupBy(*group_cols)
+            .applyInPandas(fn, schema=schema))

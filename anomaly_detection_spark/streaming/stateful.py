@@ -24,6 +24,8 @@ import pandas as pd
 
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from anomaly_detection_spark.operators.sequential import _ladder_codes_np
+
 
 def _whole_batch(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     """Collect ONE key's micro-batch (delivered as multiple Arrow
@@ -44,7 +46,6 @@ def ema_state_fn(N: int, LL: float, UL: float,
     ``applyInPandasWithState``. Output rows: key, order, value, ema, code."""
     s = 2.0 / (N + 1)
     mid, half = (UL + LL) / 2.0, (UL - LL) / 2.0
-    stages = sorted(warning_stages)
 
     def fn(key: Tuple[Any, ...], batches: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
@@ -65,15 +66,10 @@ def ema_state_fn(N: int, LL: float, UL: float,
             ema = pd.Series(np.concatenate(([prev_ema], v))) \
                 .ewm(alpha=s, adjust=False).mean().to_numpy()[1:]
         vn = (ema - mid) / half
-        code = np.ones(len(v), dtype=np.int32)
-        if stages:
-            code[np.abs(vn) > stages[0]] = 0
-        code[vn > 1.0] = -1
-        code[vn < -1.0] = -1
         out = pdf[["key", "order"]].copy()
         out["value"] = v
         out["ema"] = ema
-        out["code"] = code
+        out["code"] = _ladder_codes_np(vn, warning_stages)
         prev_ema, prev_n = float(ema[-1]), prev_n + len(v)
         yield out
         state.update((prev_ema, prev_n))
@@ -267,8 +263,6 @@ def welford_state_fn(X: float, warning_stages: Sequence[float] = ()):
     0 and 1 Undefined, then vn = (v-mean)/(X*stddev_pop))."""
     from anomaly_detection_spark.sketches import welford_merge
 
-    stages = sorted(warning_stages)
-
     def fn(key: Tuple[Any, ...], batches: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         n0, mean0, m20 = state.get if state.exists else (0.0, 0.0, 0.0)
@@ -295,10 +289,7 @@ def welford_state_fn(X: float, warning_stages: Sequence[float] = ()):
                 # vn 0, else inf
                 vn = np.where(sd > 0, (v - mean_prior) / (X * sd),
                               np.where(v == mean_prior, 0.0, np.inf))
-            codes = np.ones(len(v), dtype=np.int32)
-            if stages:
-                codes[np.abs(vn) > stages[0]] = 0
-            codes[(vn > 1.0) | (vn < -1.0)] = -1
+            codes = _ladder_codes_np(vn, warning_stages)
             codes[cnt <= 1] = 2
             # fold the whole batch into the carried moments (exact merge)
             if len(v):

@@ -122,6 +122,46 @@ def test_ledger_compaction(spark, tmp_path):
     assert sorted(map(key, before)) == sorted(map(key, after))
 
 
+def test_compaction_crash_after_rename_aside_keeps_ledger(
+        spark, tmp_path, monkeypatch):
+    """A compaction that dies after renaming the old ledger aside (before
+    the compacted copy is renamed in) must not lose the ledger: the next
+    read puts the old one back, and a retried compaction succeeds."""
+    import os
+
+    from anomaly_detection_spark.audit import AUDIT_SCHEMA
+
+    ledger = AuditLedger(spark, str(tmp_path / "audit_crash"))
+    for i in range(2):
+        ledger.append(spark.createDataFrame(
+            [(f"p{i}", f"r{i}", float(i), 10, 10, 7, 1.0, 0.5, 0, 0, 0,
+              "PASS", 0.1)], AUDIT_SCHEMA))
+    rows = lambda: sorted((r["partition_key"], r["run_id"])  # noqa: E731
+                          for r in ledger.committed().collect())
+    before = rows()
+    assert before == [("p0", "r0"), ("p1", "r1")]
+
+    real_replace = os.replace
+    calls = []
+
+    def replace(src, dst):
+        calls.append((src, dst))
+        if len(calls) == 2:
+            raise OSError("crash before the compacted copy moves in")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(OSError):
+        ledger.compact()
+    monkeypatch.undo()
+    assert calls[0][1].endswith(".old")
+    assert not (tmp_path / "audit_crash").exists()
+    assert rows() == before
+    assert not (tmp_path / "audit_crash.old").exists()
+    assert ledger.compact() == 2
+    assert rows() == before
+
+
 def test_unreadable_ledger_raises(spark, tmp_path):
     """Only a missing ledger reads as empty; a corrupt one must not, or
     every partition would be recomputed and appended again."""

@@ -224,24 +224,6 @@ class TestGanCheckGuards:
         assert set(rest.code) <= {-1, 1}
 
 
-def test_shuffle_partitions_tolerates_auto(spark):
-    """Platforms with auto-optimized shuffle set
-    spark.sql.shuffle.partitions='auto' (stock Spark rejects the string,
-    so a stub session stands in); the fan-out pins must fall back to
-    defaultParallelism instead of raising ValueError."""
-    from types import SimpleNamespace
-
-    from anomaly_detection_spark.session import shuffle_partitions
-
-    fake = SimpleNamespace(
-        conf=SimpleNamespace(get=lambda k, d=None: "auto"),
-        sparkContext=SimpleNamespace(defaultParallelism=8),
-    )
-    assert shuffle_partitions(fake) == 8
-    assert shuffle_partitions(spark) == \
-        int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
 class TestTrendNNCheck:
     def test_ramps_flag_flat_stays_ok(self, spark):
         """The net flags where its inputs resemble its training

@@ -147,33 +147,130 @@ def test_rrcf_univariate_fast_path_matches_general_path():
     assert fast == general
 
 
-def test_grouped_fanout_survives_aqe_coalescing(spark):
-    """AQE's byte-based partition coalescing must NOT collapse the
-    Python-kernel stage behind ``_grouped`` to one task: the shuffle is
-    tiny (a few MB) but the per-group cost is Python CPU, so the helper
-    pins an explicit repartition (exempt from coalescing) before the
-    groupBy. Regression for the round-4 finding where the RRCF scoring
-    stage ran 63 buckets in ONE task (5.9s vs 0.98s parallel)."""
-    import pandas as pd
-
-    from anomaly_detection_spark.operators.sequential import (
-        SERIES_BUCKETS, _grouped,
+def _series_frame(spark, n_series=40, n_rows=100):
+    """A few thousand rows: a shuffle small enough that AQE would
+    coalesce it to one partition."""
+    return spark.range(0, n_series * n_rows).select(
+        (F.col("id") % n_series).alias("series"),
+        (F.col("id") / n_series).cast("double").alias("ts"),
+        F.sin(F.col("id")).alias("v"),
+        F.cos(F.col("id") * 3).alias("f2"),
     )
 
-    df = spark.range(0, 20_000).select(
-        (F.col("id") % 100).alias("series"),
-        F.col("id").alias("ts"),
-        (F.col("id") % 7).cast("double").alias("v"),
+
+def _embeddings(spark, sf_dir):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
+        .select("vec_id",
+                F.col("embedding").cast("array<double>").alias("embedding"))
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+    return emb, queries
+
+
+def _fanout_cases():
+    from anomaly_detection_spark.functions import similarity as sim
+    from anomaly_detection_spark.operators import (
+        clustering, forecast, mvoutlier, sequential,
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf[["series", "ts", "v"]]
+    feats = ["v", "f2"]
+    return {
+        # name: (module whose group_apply runs, bound on the group count,
+        #        operator over (spark, series frame, sf dir))
+        "ema_check": (sequential, sequential.SERIES_BUCKETS,
+                      lambda sp, df, sf: sequential.ema_check(
+                          df, "series", "ts", "v", N=5, LL=-1.0, UL=1.0)),
+        "iforest_check": (mvoutlier, None,
+                          lambda sp, df, sf: mvoutlier.iforest_check(
+                              df, "series", feats, n_trees=5)),
+        "pca_iforest_check": (mvoutlier, None,
+                              lambda sp, df, sf: mvoutlier.pca_iforest_check(
+                                  df, "series", feats, n_components=1,
+                                  n_trees=5)),
+        "codisp_check": (mvoutlier, None,
+                         lambda sp, df, sf: mvoutlier.codisp_check(
+                             df, "series", feats, n_trees=5)),
+        "clustering_check_grouped": (
+            clustering, None,
+            lambda sp, df, sf: clustering.clustering_check_grouped(
+                df, "series", feats, eps=0.5, min_samples=3,
+                treshold=0.5)),
+        "iforest_retrain_check": (
+            mvoutlier, None,
+            lambda sp, df, sf: mvoutlier.iforest_retrain_check(
+                df, "series", "ts", feats, retrain_interval=25,
+                samples_for_retrain=50, n_trees=5)),
+        "clustering_retrain_check": (
+            clustering, None,
+            lambda sp, df, sf: clustering.clustering_retrain_check(
+                df, "series", "ts", feats, eps=0.5, min_samples=3,
+                treshold=0.5, retrain_interval=25,
+                samples_for_retrain=50)),
+        "forecast_retrain_check": (
+            forecast, None,
+            lambda sp, df, sf: forecast.forecast_retrain_check(
+                df, "series", "ts", "v", min_samples=20, max_samples=50,
+                retrain_interval=25, period=10.0)),
+        # n_probe == n_cells probes every cell: n_cells groups
+        "ivf_topk": (sim, 16,
+                     lambda sp, df, sf: sim.ivf_topk(
+                         *_embeddings(sp, sf), k=3, n_cells=16, n_probe=16)),
+        "ivf_topk_few_cells": (sim, 4,
+                               lambda sp, df, sf: sim.ivf_topk(
+                                   *_embeddings(sp, sf), k=3, n_cells=4,
+                                   n_probe=4)),
+    }
 
-    out = _grouped(df, ["series"], "ts", fn,
-                   "series bigint, ts bigint, v double")
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # output partitioning == the pinned fan-out, not an AQE-coalesced 1
-    assert out.rdd.getNumPartitions() == min(SERIES_BUCKETS, n_shuffle) > 1
+
+@pytest.mark.parametrize("name", list(_fanout_cases()))
+def test_grouped_fanout_survives_aqe_coalescing(spark, sf_dir_small,
+                                                monkeypatch, name):
+    """AQE's byte-based partition coalescing must NOT collapse a grouped
+    pandas stage to one task: the shuffle is tiny but the per-group cost
+    is Python CPU, so ``session.group_apply`` pins an explicit
+    repartition (exempt from coalescing) of min(groups, cores) before
+    the groupBy. Regression for the round-4 finding where the RRCF
+    scoring stage ran 63 buckets in ONE task (5.9s vs 0.98s parallel)."""
+    from anomaly_detection_spark import session
+
+    module, bound, op = _fanout_cases()[name]
+    stages = []
+
+    def spy(*args, **kwargs):
+        stages.append(session.group_apply(*args, **kwargs))
+        return stages[-1]
+
+    monkeypatch.setattr(module, "group_apply", spy)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    op(spark, _series_frame(spark), sf_dir_small)
+    assert len(stages) == 1, name
+    cores = spark.sparkContext.defaultParallelism
+    want = min(bound or cores, cores)
+    assert stages[0].rdd.getNumPartitions() == want > 1, name
+
+
+def test_only_group_apply_calls_apply_in_pandas():
+    """Every grouped pandas stage goes through ``session.group_apply``,
+    so the fan-out pin lives in one place."""
+    import ast
+    import pathlib
+
+    import anomaly_detection_spark
+
+    root = pathlib.Path(anomaly_detection_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        if ".applyInPandas(" not in src:
+            continue
+        funcs = [n for n in ast.walk(ast.parse(src))
+                 if isinstance(n, ast.FunctionDef)]
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if ".applyInPandas(" in line:
+                owner = [f.name for f in funcs
+                         if f.lineno <= lineno <= f.end_lineno]
+                hits.append((path.relative_to(root).as_posix(), owner))
+    assert hits == [("session.py", ["group_apply"])], hits
 
 
 def test_ann_topk_deterministic_tie_break(spark):

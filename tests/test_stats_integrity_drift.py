@@ -231,3 +231,17 @@ def test_stats_and_drift_plan_no_python_stage(spark, corpus):
         assert not [s for s in PYTHON_STAGES if s in plan], (name, plan)
     # the keyed profile is one hash aggregate: partial, one shuffle, final
     assert plan_counts(plans["profile_keyed"])[1] == 1
+
+
+def test_duplicate_keys_hot_key_exact_one_exchange(spark):
+    """One hot key x 20k rows plus unique keys: the exact dup_count from
+    ONE hash aggregate (its map-side partial count absorbs the hot key),
+    so the plan has exactly one Exchange."""
+    hot = spark.range(20_000).select(F.lit(-1).cast("long").alias("k"),
+                                     F.lit("x").alias("tag"))
+    uniq = spark.range(5_000).select(F.col("id").alias("k"),
+                                     F.lit("x").alias("tag"))
+    df = hot.unionByName(uniq)
+    assert plan_counts(duplicate_keys(df, ["k", "tag"]))[1] == 1
+    assert [tuple(r) for r in duplicate_keys(df, ["k", "tag"]).collect()] \
+        == [(-1, "x", 20_000)]
