@@ -31,11 +31,14 @@ def test_full_run_then_noop_resume(spark, tmp_path):
     # all planted errors accounted for: 4 checks' error counts
     tot = ledger.committed().agg(F.sum("n_error").alias("e")).first()["e"]
     assert tot > 0
-    # rerun: nothing pending, ledger unchanged
+    # rerun: nothing pending, ledger unchanged, nothing left cached
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     second = run_partitioned_checks(
         spark, df, partition_col="bucket", value_col="content_len",
         code_cols=CODE_COLS, ledger=ledger, run_id="r2",
     )
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) \
+        <= persisted
     assert second.count() == 0
     assert ledger.committed().count() == 16
     assert ledger.committed().filter("run_id = 'r2'").count() == 0
@@ -84,6 +87,35 @@ def test_verdict_threshold(spark, tmp_path):
     )
     # nothing can exceed a 100% error-rate threshold
     assert audit.filter("verdict = 'fail'").count() == 0
+
+
+def test_wall_s_times_the_aggregation(spark, tmp_path):
+    """``wall_s`` is the measured time of the job that computes the
+    audit rows: a check column that sleeps 0.3 s per partition shows in
+    every row, and the returned rows are the ones the ledger holds."""
+    import time
+
+    import pandas as pd
+
+    @F.pandas_udf("int")
+    def slow_check(v: pd.Series) -> pd.Series:
+        time.sleep(0.3)
+        return pd.Series(1, index=v.index, dtype="int32")
+
+    df = spark.range(40).select(
+        (F.col("id") % 4).alias("bucket"),
+        F.col("id").cast("double").alias("value"),
+    ).repartition(4).withColumn("c_slow", slow_check("value"))
+    ledger = AuditLedger(spark, str(tmp_path / "audit_wall"))
+    audit = run_partitioned_checks(
+        spark, df, partition_col="bucket", value_col="value",
+        code_cols=["c_slow"], ledger=ledger, run_id="w",
+    ).collect()
+    assert len(audit) == 4
+    assert all(r["wall_s"] >= 0.3 for r in audit), audit
+    assert len({r["wall_s"] for r in audit}) == 1
+    assert sorted(map(tuple, audit)) == \
+        sorted(map(tuple, ledger.committed().collect()))
 
 
 def test_cli_smoke(spark, capsys):

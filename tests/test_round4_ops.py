@@ -249,9 +249,14 @@ def test_grouped_fanout_survives_aqe_coalescing(spark, sf_dir_small,
     assert stages[0].rdd.getNumPartitions() == want > 1, name
 
 
-def test_only_group_apply_calls_apply_in_pandas():
-    """Every grouped pandas stage goes through ``session.group_apply``,
-    so the fan-out pin lives in one place."""
+@pytest.mark.parametrize("api, owner", [
+    (".applyInPandas(", ("session.py", ["group_apply"])),
+    (".applyInPandasWithState(", ("streaming/stateful.py", ["_stateful"])),
+], ids=["applyInPandas", "applyInPandasWithState"])
+def test_one_owner_per_pandas_api(api, owner):
+    """Every grouped pandas stage goes through ``session.group_apply``
+    and every stateful streaming stage through ``stateful._stateful``,
+    so the fan-out pin and the state load/store each live in one place."""
     import ast
     import pathlib
 
@@ -261,16 +266,16 @@ def test_only_group_apply_calls_apply_in_pandas():
     hits = []
     for path in sorted(root.rglob("*.py")):
         src = path.read_text()
-        if ".applyInPandas(" not in src:
+        if api not in src:
             continue
         funcs = [n for n in ast.walk(ast.parse(src))
                  if isinstance(n, ast.FunctionDef)]
         for lineno, line in enumerate(src.splitlines(), 1):
-            if ".applyInPandas(" in line:
-                owner = [f.name for f in funcs
-                         if f.lineno <= lineno <= f.end_lineno]
-                hits.append((path.relative_to(root).as_posix(), owner))
-    assert hits == [("session.py", ["group_apply"])], hits
+            if api in line:
+                owner_fn = [f.name for f in funcs
+                            if f.lineno <= lineno <= f.end_lineno]
+                hits.append((path.relative_to(root).as_posix(), owner_fn))
+    assert hits == [owner], hits
 
 
 def test_ann_topk_deterministic_tie_break(spark):

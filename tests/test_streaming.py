@@ -3,6 +3,7 @@ suite with watermarked windowed aggregation; late-data drop semantics."""
 
 import time
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -476,3 +477,98 @@ def test_stateful_prophet_across_microbatches(spark, tmp_path):
                 assert yh == pytest.approx(r["yhat"], rel=1e-9), \
                     (tag, r["order"])
         assert got[90.0][1] == -1
+
+
+# two series of 14 rows; file 1 holds each series' first 8 rows
+_RESTART_ROWS = [
+    (key, float(i),
+     float(10.0 + 3.0 * np.sin(i + off) + (30.0 if i == 11 else 0.0)),
+     float(9.0 + 2.0 * np.cos(i + off)))
+    for key, off in (("a", 0.0), ("b", 1.5)) for i in range(14)
+]
+
+
+def _restart_cases():
+    """name -> (stream_df -> verdict stream), one per stateful check."""
+    from anomaly_detection_spark.operators.neural import fit_autoencoder
+    from anomaly_detection_spark.streaming import stateful as st
+
+    X = np.array([[v, f] for _, _, v, f in _RESTART_ROWS])
+    mn, mx = float(X.min()), float(X.max())
+    av = (mn + mx) / 2.0
+    weights, acts, _ = fit_autoencoder((X - av) / (mx - mn), 1, seed=0)
+    feats = ["value", "f2"]
+    return {
+        "ema": lambda s: st.streaming_ema_check(
+            s, N=3, LL=0.0, UL=20.0, warning_stages=(0.9,)),
+        "welford": lambda s: st.streaming_welford_check(
+            s, X=2.0, warning_stages=(0.8,)),
+        "clustering": lambda s: st.streaming_clustering_retrain(
+            s, feats, eps=1.5, min_samples=2, treshold=1.0,
+            retrain_interval=3, samples_for_retrain=5),
+        "rrcf": lambda s: st.streaming_rrcf_check(
+            s, feats, num_trees=4, tree_size=6, threshold=2.0),
+        "gan": lambda s: st.streaming_gan_check(
+            s, feats, model=(mn, mx, av, weights, acts), K=4.0,
+            len_window=8),
+        "trend": lambda s: st.streaming_trend_nn_check(
+            s, N=4, averaging=2, prediction_conv=2, amp_scale=0.5,
+            num_samples=200),
+        "prophet": lambda s: st.streaming_forecast_retrain_check(
+            s, min_samples=6, max_samples=8, retrain_interval=2,
+            period=6.0, harmonics=1),
+    }
+
+
+@pytest.mark.parametrize("check", ["ema", "welford", "clustering", "rrcf",
+                                   "gan", "trend", "prophet"])
+def test_stateful_restart_equals_unbroken_query(spark, tmp_path, check):
+    """Every stateful check resumes its per-key state from the
+    checkpoint: a query stopped after file 1 and restarted on the same
+    checkpointLocation for file 2 writes exactly what one unbroken query
+    writes for the same two micro-batches, and the same verdicts as one
+    micro-batch over both files (so the state really carried)."""
+    import pandas as pd
+
+    build = _restart_cases()[check]
+    schema = "key string, order double, value double, f2 double"
+
+    def write(src, rows):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(src)
+
+    def run(tag, files):
+        """One query over tag's input; each file is written, then
+        processed as its own micro-batch."""
+        src = str(tmp_path / f"{tag}_in")
+        write(src, files[0])
+        q = (build(spark.readStream.schema(schema).parquet(src))
+             .writeStream.format("parquet")
+             .option("path", str(tmp_path / f"{tag}_out"))
+             .option("checkpointLocation", str(tmp_path / f"{tag}_ck"))
+             .outputMode("append").start())
+        try:
+            q.processAllAvailable()
+            for rows in files[1:]:
+                write(src, rows)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def output(tag):
+        return spark.read.parquet(str(tmp_path / f"{tag}_out")).toPandas() \
+            .sort_values(["key", "order"]).reset_index(drop=True)
+
+    first = [r for r in _RESTART_ROWS if r[1] < 8]
+    second = [r for r in _RESTART_ROWS if r[1] >= 8]
+    run("restart", [first])
+    run("restart", [second])  # new query, same checkpoint: state resumes
+    run("ref", [first, second])
+    run("whole", [first + second])
+
+    got, want, whole = output("restart"), output("ref"), output("whole")
+    assert len(want) == len(_RESTART_ROWS)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert got["code"].tolist() == whole["code"].tolist()
+    pd.testing.assert_frame_equal(got, whole, rtol=1e-9)
+    assert (got["code"] != 2).any(), "state never left warm-up"
