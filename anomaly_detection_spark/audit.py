@@ -48,23 +48,32 @@ class AuditLedger:
         self.path = path
         self.fmt = audit_format
 
-    def committed(self) -> DataFrame:
-        """Partition keys already committed (empty frame if no ledger yet).
-        Any other read failure raises: reading an unreadable ledger as
-        empty would recompute every partition and append duplicate rows."""
+    def _read(self) -> DataFrame | None:
+        """The ledger, or None if none exists yet. Any other read failure
+        raises: reading an unreadable ledger as empty would recompute
+        every partition and append duplicate rows."""
         self._recover()
         try:
             return self.spark.read.format(self.fmt).load(self.path)
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
+            return None
+
+    def committed(self) -> DataFrame:
+        """Partition keys already committed (empty frame if no ledger yet)."""
+        df = self._read()
+        if df is None:
             return self.spark.createDataFrame([], AUDIT_SCHEMA)
+        return df
 
     def pending(self, partitions: DataFrame, key: str = "partition_key") -> DataFrame:
-        """Anti-join: partitions with no committed audit row."""
-        done = self.committed().select(
-            F.col("partition_key").alias(key)
-        ).distinct()
+        """Anti-join: partitions with no committed audit row. With no
+        ledger yet every partition is pending, and no join is planned."""
+        df = self._read()
+        if df is None:
+            return partitions
+        done = df.select(F.col("partition_key").alias(key)).distinct()
         return partitions.join(done, on=key, how="left_anti")
 
     def append(self, rows: DataFrame) -> None:
@@ -78,8 +87,11 @@ class AuditLedger:
         directory, rename the old ledger aside, rename the copy in, and
         only then delete the old one. Siblings share a filesystem, so both
         renames are atomic; a crash between them leaves the whole ledger
-        aside, where :meth:`committed` finds it."""
-        df = self.committed()
+        aside, where :meth:`committed` finds it. With no ledger yet it
+        writes nothing and returns 0."""
+        df = self._read()
+        if df is None:
+            return 0
         n = df.count()
         path = self.path.rstrip("/")
         new, old = path + ".compact", path + ".old"

@@ -678,14 +678,13 @@ def _planted_fk(df, key_col: str, id_col: str, sel_max: int):
 
 
 def q_integrity_suite(spark, sf_dir) -> DataFrame:
-    """All three §2.6 integrity operators in one suite (round-4 merge):
-    salted two-level uniqueness, exact broadcast-anti referential, and
-    Bloom-prefiltered referential — with PLANTED violations (negated
-    foreign keys on cloned rows) so every check's violation set is
-    non-trivial and exactly enumerable by both engines. Output
-    (check, k1, k2) unions the three verdict families."""
+    """The §2.6 integrity operators in one suite: one-aggregate
+    uniqueness and two exact anti-join referential checks — with PLANTED
+    violations (negated foreign keys on cloned rows) so every check's
+    violation set is non-trivial and exactly enumerable by both engines.
+    Output (check, k1, k2) unions the three verdict families."""
     from anomaly_detection_spark.operators.integrity import (
-        duplicate_keys, referential_violations, referential_violations_bloom,
+        duplicate_keys, referential_violations,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -702,9 +701,7 @@ def q_integrity_suite(spark, sf_dir) -> DataFrame:
 
     li_p = _planted_fk(li, "l_partkey", "l_orderkey", 100)
     p = load_table(spark, sf_dir, "part")
-    ref_l = referential_violations_bloom(
-        spark, li_p, "l_partkey", p, "p_partkey"
-    ).select(
+    ref_l = referential_violations(li_p, "l_partkey", p, "p_partkey").select(
         F.lit("ref_lineitem_partkey").alias("check_name"),
         F.col("l_orderkey").alias("k1"), F.col("l_partkey").alias("k2"))
 

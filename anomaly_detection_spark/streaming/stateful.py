@@ -214,17 +214,32 @@ def streaming_rrcf_check(stream_df, features: Sequence[str], *,
                      state="forest binary")
 
 
+def welford_merge(a, b):
+    """Chan's parallel update: exact, associative merge of two
+    (count, mean, M2) moment sets."""
+    na, ma, M2a = a
+    nb, mb, M2b = b
+    if na == 0.0:
+        return b
+    if nb == 0.0:
+        return a
+    n = na + nb
+    delta = mb - ma
+    mean = ma + delta * nb / n
+    M2 = M2a + M2b + delta * delta * na * nb / n
+    return (n, mean, M2)
+
+
 def streaming_welford_check(stream_df, *, X: float,
                             warning_stages: Sequence[float] = ()):
-    """Streaming Welford check across micro-batches: state = the engine's
-    mergeable (count, mean, M2) moments (sketches.welford_merge powers
-    the cross-batch continuation exactly like the audit sketches). Each
-    row is scored against the statistics of all PRIOR rows
+    """Streaming Welford check across micro-batches: state = mergeable
+    (count, mean, M2) moments, each batch folded in with
+    :func:`welford_merge`. Each row is scored against the statistics of
+    all PRIOR rows
     (/root/reference/src/algorithms/welford.py:176-191 semantics: rows
     0 and 1 Undefined, then vn = (v-mean)/(X*stddev_pop)).
 
     stream_df columns: (key string, order double, value double)."""
-    from anomaly_detection_spark.sketches import welford_merge
 
     def step(pdf, st):
         n0, mean0, m20 = st

@@ -38,7 +38,7 @@ HEADLINE = [
     "column_stats_documents",          # group stats
     "salted_stats_lineitem",           # two-level salted agg
     "welford_profile_events",          # mapInPandas sketch + merge
-    "integrity_suite_lineitem_orders", # salted uniq + anti join + bloom
+    "integrity_suite_lineitem_orders", # hash-agg uniq + two anti joins
     "quality_tokens_documents",        # quality features + token counts
     "lang_id_documents",               # marker-count expressions
     "fingerprint_documents",           # whole-batch Rabin-Karp kernel (r5)

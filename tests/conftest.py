@@ -47,7 +47,7 @@ def plan_counts(df):
 
 def moments(v):
     """(count, mean, M2) of a batch, straight from numpy — the Welford
-    state the streaming detector folds with ``sketches.welford_merge``."""
+    state the streaming detector folds with ``stateful.welford_merge``."""
     v = np.asarray(v, dtype=np.float64)
     if v.size == 0:
         return (0.0, 0.0, 0.0)

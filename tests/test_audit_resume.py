@@ -203,3 +203,21 @@ def test_unreadable_ledger_raises(spark, tmp_path):
     (path / "part-00000.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):
         AuditLedger(spark, str(path)).committed()
+
+
+def test_fresh_ledger_pending_plans_no_join(spark, tmp_path):
+    """With no ledger yet every partition is pending: ``pending`` returns
+    the partition frame itself, so its plan has no join and no scan of a
+    Python-built empty ledger frame."""
+    from tests.conftest import plan_lines
+
+    parts = spark.range(16).select(
+        F.col("id").cast("string").alias("partition_key"))
+    plan = "\n".join(plan_lines(
+        AuditLedger(spark, str(tmp_path / "fresh")).pending(parts)))
+    assert "Join" not in plan and "ExistingRDD" not in plan, plan
+
+
+def test_compact_missing_ledger_writes_nothing(spark, tmp_path):
+    assert AuditLedger(spark, str(tmp_path / "none")).compact() == 0
+    assert list(tmp_path.iterdir()) == []

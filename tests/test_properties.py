@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.operators.stats import hll_distinct
-from anomaly_detection_spark.sketches import BloomFilter, welford_merge
+from anomaly_detection_spark.streaming.stateful import welford_merge
 from tests.conftest import moments
 
 finite = st.floats(min_value=-1e9, max_value=1e9,
@@ -43,14 +43,6 @@ def test_welford_any_partitioning_same_result(parts):
         if n1 > 0:
             assert math.isclose(m1, m2, rel_tol=1e-9, abs_tol=1e-6)
             assert math.isclose(q1 / n1, q2 / n2, rel_tol=1e-6, abs_tol=1e-4)
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.lists(st.text(min_size=1, max_size=12), min_size=1, max_size=200))
-def test_bloom_never_false_negative(keys):
-    bf = BloomFilter.sized_for(len(keys), 0.01)
-    bf.add_batch(np.array(keys, dtype=object))
-    assert bf.contains_batch(np.array(keys, dtype=object)).all()
 
 
 @settings(max_examples=25, deadline=None)

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.operators.stats import hll_distinct
-from anomaly_detection_spark.sketches import BloomFilter, welford_merge
+from anomaly_detection_spark.streaming.stateful import welford_merge
 from tests.conftest import moments
 
 
@@ -27,24 +27,6 @@ def test_welford_matches_numpy_and_merge_is_associative():
         assert mean == pytest.approx(data.mean(), rel=1e-12)
         assert m2 / n == pytest.approx(data.var(), rel=1e-9)
         assert m2 / (n - 1) == pytest.approx(data.var(ddof=1), rel=1e-9)
-
-
-def test_bloom_no_false_negatives_and_low_fp():
-    keys = [f"key-{i}" for i in range(5_000)]
-    bf = BloomFilter.sized_for(5_000, fpp=0.01)
-    # distributed-style: two partial filters OR-merged
-    a = BloomFilter(bf.m_bits, bf.k)
-    b = BloomFilter(bf.m_bits, bf.k)
-    a.add_batch(np.array(keys[:2500]))
-    b.add_batch(np.array(keys[2500:]))
-    merged = a.merge(b)
-    assert merged.contains_batch(np.array(keys)).all()  # zero false negatives
-    probe = np.array([f"absent-{i}" for i in range(10_000)])
-    fp_rate = merged.contains_batch(probe).mean()
-    assert fp_rate < 0.03
-    # serialization roundtrip
-    back = BloomFilter.from_bytes(merged.m_bits, merged.k, merged.to_bytes())
-    assert back.contains_batch(np.array(keys[:100])).all()
 
 
 def test_hll_accuracy_and_merge(spark):

@@ -19,7 +19,6 @@ from anomaly_detection_spark.operators.drift import (
 from anomaly_detection_spark.operators.integrity import (
     duplicate_keys,
     referential_violations,
-    referential_violations_bloom,
     uniqueness_violations,
 )
 from anomaly_detection_spark.operators.mvoutlier import (
@@ -73,16 +72,22 @@ def test_uniqueness_finds_planted_dups(spark, corpus):
     assert len(dk) == len(expected)
 
 
-def test_referential_exact_and_bloom_agree(spark, corpus):
+def test_referential_violations_planted(spark, corpus):
+    """Exactly the planted bad-lang rows, plus every fact row whose key
+    is NULL (it can match no dim key)."""
     dim = spark.createDataFrame(
         [(lang,) for lang in ["python", "java", "go", "js", "rust", "c", "md"]],
         "lang string",
     )
     exact = referential_violations(corpus, "lang", dim, "lang")
-    bloom = referential_violations_bloom(spark, corpus, "lang", dim, "lang")
     e = sorted(r["row_id"] for r in exact.select("row_id").collect())
-    b = sorted(r["row_id"] for r in bloom.select("row_id").collect())
-    assert e == b == expected_violation_ids(N)["bad_lang"]
+    assert e == expected_violation_ids(N)["bad_lang"]
+    null_rows = corpus.filter(F.col("row_id") < 3).withColumns({
+        "row_id": F.col("row_id") + N, "lang": F.lit(None).cast("string")})
+    with_nulls = referential_violations(
+        corpus.unionByName(null_rows), "lang", dim, "lang")
+    got = sorted(r["row_id"] for r in with_nulls.select("row_id").collect())
+    assert got == expected_violation_ids(N)["bad_lang"] + [N, N + 1, N + 2]
 
 
 def test_ks_same_vs_shifted(spark):
@@ -225,12 +230,31 @@ def test_stats_and_drift_plan_no_python_stage(spark, corpus):
                                    "content_len"),
         "psi": psi_numeric(corpus.filter(half), corpus.filter(~half),
                            "content_len", lo=0, hi=4000),
+        "referential": referential_violations(
+            corpus, "lang", corpus.filter(half).select("lang"), "lang"),
+        "uniqueness": uniqueness_violations(corpus, ["repo", "path", "commit"]),
     }
     for name, df in plans.items():
         plan = "\n".join(plan_lines(df))
         assert not [s for s in PYTHON_STAGES if s in plan], (name, plan)
     # the keyed profile is one hash aggregate: partial, one shuffle, final
     assert plan_counts(plans["profile_keyed"])[1] == 1
+
+
+def test_referential_no_forced_broadcast(spark, corpus):
+    """With auto-broadcast off, the referential check plans a sort-merge
+    anti-join: no join hint forces the dim side into a broadcast."""
+    dim = corpus.filter(F.col("row_id") % 2 == 0).select("lang")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = "\n".join(plan_lines(
+            referential_violations(corpus, "lang", dim, "lang")))
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in plan, plan
+    assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
 
 
 def test_duplicate_keys_hot_key_exact_one_exchange(spark):
