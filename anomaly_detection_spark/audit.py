@@ -27,10 +27,11 @@ import shutil
 import time
 import uuid
 
-import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from anomaly_detection_spark.session import local_frame
 
 AUDIT_SCHEMA = (
     "partition_key string, run_id string, committed_at double, "
@@ -64,7 +65,7 @@ class AuditLedger:
         """Partition keys already committed (empty frame if no ledger yet)."""
         df = self._read()
         if df is None:
-            return self.spark.createDataFrame([], AUDIT_SCHEMA)
+            return local_frame(self.spark, [], AUDIT_SCHEMA)
         return df
 
     def pending(self, partitions: DataFrame, key: str = "partition_key") -> DataFrame:
@@ -142,7 +143,7 @@ def run_partitioned_checks(
     todo = ledger.pending(parts).cache()
     try:
         if todo.isEmpty():
-            return spark.createDataFrame([], AUDIT_SCHEMA)
+            return local_frame(spark, [], AUDIT_SCHEMA)
         scoped = df.withColumn(
             "partition_key", F.col(partition_col).cast("string")
         ).join(F.broadcast(todo), on="partition_key", how="left_semi")
@@ -172,16 +173,12 @@ def run_partitioned_checks(
         ).collect()
         wall = time.perf_counter() - t0
         committed_at = time.time()
-        # an Arrow table, which the JVM reads itself: built from a list
-        # of tuples, the frame would run Python workers in the write and
-        # in every later action (~1 s per commit at local[4]). Keys stay
-        # in AUDIT_SCHEMA order; the Arrow cast matches fields by position
-        audit = spark.createDataFrame(pa.Table.from_pylist([
-            {"partition_key": r.partition_key, "run_id": run_id,
-             "committed_at": committed_at, **r.asDict(),
-             "verdict": ("fail" if r.n_error > r.n_rows * fail_on_error_rate
-                         else "pass"),
-             "wall_s": wall} for r in agg]), AUDIT_SCHEMA)
+        audit = local_frame(spark, [
+            (r.partition_key, run_id, committed_at, r.n_rows, r.n_value,
+             r.input_fingerprint, r.mean, r.m2,
+             r.n_error, r.n_warning, r.n_undefined,
+             "fail" if r.n_error > r.n_rows * fail_on_error_rate else "pass",
+             wall) for r in agg], AUDIT_SCHEMA)
         ledger.append(audit.coalesce(1))
         return audit
     finally:

@@ -41,6 +41,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.session import local_frame
+
 
 class UnsupportedAlgorithm(ValueError):
     pass
@@ -106,7 +108,8 @@ def _gan_train_frame(spark, path: str | None, n_shifts: int, feats):
                       for k in range(0, n_shifts + 1)], axis=1)
     else:
         M = vals.reshape(-1, 1)
-    return spark.createDataFrame(pd.DataFrame(M, columns=list(feats)))
+    return local_frame(spark, M.tolist(),
+                       ", ".join(f"`{c}` double" for c in feats))
 
 
 def _load_prophet_history(path: str | None, keep_last: int):
@@ -596,12 +599,12 @@ def _compile_base(
                 # output — only live rows carry verdicts
                 spark = df.sparkSession
                 # build with double order then cast to the live frame's
-                # dtype: createDataFrame verifies Python floats against
-                # the declared type, so an integer order column (epoch
-                # seconds as long) would reject float(t0) rows
+                # dtype: local_frame refuses a lossy float for an integer
+                # column, so an integer order column (epoch seconds as
+                # long) would reject fractional float(t0) rows
                 o_type = df.schema[order].dataType
-                hdf = spark.createDataFrame(
-                    [(float(t0), float(y)) for t0, y in hist],
+                hdf = local_frame(
+                    spark, [(float(t0), float(y)) for t0, y in hist],
                     f"`{order}` double, `{value}` double",
                 ).withColumn(order, F.col(order).cast(o_type))
                 hjoin = (

@@ -35,6 +35,7 @@ from anomaly_detection_spark.functions.text import (
     quality_score,
     ws_token_count,
 )
+from anomaly_detection_spark.session import local_frame
 
 
 @dataclass
@@ -185,7 +186,7 @@ class CurationReport:
         return list(self._rows)
 
     def df(self) -> DataFrame:
-        return self._spark.createDataFrame(self.rows(), _REPORT_SCHEMA)
+        return local_frame(self._spark, self.rows(), _REPORT_SCHEMA)
 
     def collect(self):
         return self.df().collect()

@@ -110,14 +110,15 @@ def budget_mixture(docs: DataFrame, budgets: dict[str, float], *,
     whitespace-token expression the quality suite uses (codegen'd).
     """
     from anomaly_detection_spark.functions.text import ws_token_count
+    from anomaly_detection_spark.session import local_frame
 
     tok = token_col if token_col is not None else ws_token_count(F.col("text"))
     with_tok = docs.withColumn("_tokens", tok.cast("bigint"))
     totals = (with_tok.groupBy(stratum_col)
               .agg(F.sum("_tokens").alias("_total_tokens")))
     budget_rows = [(k, float(v)) for k, v in sorted(budgets.items())]
-    bdf = docs.sparkSession.createDataFrame(
-        budget_rows, f"{stratum_col} string, _budget double")
+    bdf = local_frame(
+        docs.sparkSession, budget_rows, f"{stratum_col} string, _budget double")
     rates = (totals.join(F.broadcast(bdf), stratum_col, "inner")
              .withColumn("_rate", F.least(
                  F.lit(1.0),

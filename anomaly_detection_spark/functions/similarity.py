@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.sampling import bounded_sample_rows
-from anomaly_detection_spark.session import group_apply
+from anomaly_detection_spark.session import group_apply, local_frame
 
 
 def _norm(c):
@@ -298,7 +298,7 @@ def ivf_topk(
     spark = corpus.sparkSession
     qids, _, Qn = _collect_queries(queries, query_id, vec_col)
     if qids is None:
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return local_frame(spark, [], out_schema + ", rank int")
     p = min(n_probe, C.shape[0])
     probe = np.argpartition(-(Qn @ C.T), p - 1, axis=1)[:, :p]
     cell_queries: dict[int, list[int]] = {}
@@ -382,7 +382,7 @@ def lsh_topk(
     spark = corpus.sparkSession
     qids, Q, Qn = _collect_queries(queries, query_id, vec_col)
     if qids is None:
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return local_frame(spark, [], out_schema + ", rank int")
     qbits = (Q @ planes.T >= 0).astype(np.int64).reshape(
         len(qids), n_tables, n_planes)
     qbkt = (qbits << shifts).sum(axis=2)  # (q, tbl)

@@ -23,12 +23,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.codes import ladder_code
+from anomaly_detection_spark.session import local_frame
 
 EPS = 1e-6  # PSI zero-bin smoothing (standard practice)
 
@@ -142,10 +141,8 @@ def ks_check(
     if sk["na"] == 0 or sk["nb"] == 0:
         ks = float("nan")
     else:
-        # built from pandas (Arrow): a local relation, so the two selects
-        # below are evaluated in the driver without launching a job
-        one = base.sparkSession.createDataFrame(
-            pd.DataFrame({"a": [sk["a"]], "b": [sk["b"]]}))
+        one = local_frame(base.sparkSession, [(sk["a"], sk["b"])],
+                          "a binary, b binary")
         grid = F.lit([i / KS_RANK_GRID for i in range(KS_RANK_GRID + 1)])
         q = one.select(F.kll_sketch_get_quantile_double("a", grid),
                        F.kll_sketch_get_quantile_double("b", grid)).first()
@@ -220,7 +217,7 @@ def ks_exact_tagged(tagged: DataFrame, *,
         nb = float(sum(r["tb"] for r in tot))
         nc = float(sum(r["tc"] for r in tot))
         if nb == 0 or nc == 0:
-            return spark.createDataFrame([(float("nan"),)], "ks double")
+            return local_frame(spark, [(float("nan"),)], "ks double")
         offs_b: dict[int, float] = {}
         offs_c: dict[int, float] = {}
         ob = oc = 0.0
@@ -242,7 +239,7 @@ def ks_exact_tagged(tagged: DataFrame, *,
             F.max(F.abs(F.col("diff"))).alias("ks")).first()["ks"]
     finally:
         d.unpersist()
-    return spark.createDataFrame([(float(ks_val),)], "ks double")
+    return local_frame(spark, [(float(ks_val),)], "ks double")
 
 
 def partition_stat_drift(

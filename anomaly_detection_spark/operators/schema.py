@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from anomaly_detection_spark.session import local_frame
+
 
 @dataclass
 class ColumnSpec:
@@ -94,6 +96,10 @@ def schema_code(df: DataFrame, spec: SchemaSpec) -> int:
     return 0 if findings else 1
 
 
+_COMPLETENESS_SCHEMA = (
+    "column string, null_rate double, max_null_rate double, code int")
+
+
 def completeness_check(df: DataFrame, spec: SchemaSpec) -> DataFrame:
     """Data-level: per-column null-rate verdicts for every spec column
     with a ``max_null_rate``. ONE aggregate over the scan regardless of
@@ -101,13 +107,11 @@ def completeness_check(df: DataFrame, spec: SchemaSpec) -> DataFrame:
     cols = [c for c in spec.columns
             if c.max_null_rate is not None and c.name in df.columns]
     if not cols:
-        return df.sparkSession.createDataFrame(
-            [], "column string, null_rate double, max_null_rate double, code int")
+        return local_frame(df.sparkSession, [], _COMPLETENESS_SCHEMA)
     aggs = [F.avg(F.col(c.name).isNull().cast("double")).alias(c.name)
             for c in cols]
     row = df.agg(*aggs).first()
     out = [(c.name, float(row[c.name] or 0.0), c.max_null_rate,
             -1 if (row[c.name] or 0.0) > c.max_null_rate else 1)
            for c in cols]
-    return df.sparkSession.createDataFrame(
-        out, "column string, null_rate double, max_null_rate double, code int")
+    return local_frame(df.sparkSession, out, _COMPLETENESS_SCHEMA)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.codes import ladder_code, ladder_code_sql
-from anomaly_detection_spark.session import load_table
+from anomaly_detection_spark.session import load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -404,7 +404,8 @@ def q_trend_suite_events(spark, sf_dir) -> DataFrame:
     # tests/test_neural_ops.py — 8 error rows each, 0 for flat)
     shapes = [lambda i: 0.025 * i, lambda i: 1.0 - 0.025 * i,
               lambda i: 0.5]
-    pl = spark.createDataFrame(
+    pl = local_frame(
+        spark,
         [(9_000_001 + s, float(i), float(shapes[s](i)))
          for s in range(3) for i in range(40)],
         "user_id long, _i double, value double",
@@ -2790,7 +2791,8 @@ def q_curation_full_documents(spark, sf_dir) -> DataFrame:
     rows = {r[0]: r for r in report.rows()}
     n0, n1 = rows["quality_lang_gate"][1], rows["quality_lang_gate"][2]
     n2, n3 = rows["exact_dedup"][2], rows["near_dedup"][2]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n0, n1, n2, bool(n3 <= n2), bool(n3 == n_direct))],
         "rows_raw long, rows_gated long, rows_exact long, "
         "near_dedup_monotone boolean, counts_consistent boolean",
@@ -3181,8 +3183,8 @@ def q_pii_redact_documents(spark, sf_dir) -> DataFrame:
                                (did % 9).cast("string"))),
         ).alias("text"))
 
-    bl = spark.createDataFrame([(dom,) for dom in _PII_BLOCKLIST],
-                               "domain string")
+    bl = local_frame(spark, [(dom,) for dom in _PII_BLOCKLIST],
+                     "domain string")
     flags = blocked_by_join(planted, bl)
     c = pii_counts(F.col("text"))
     red = redact_pii(F.col("text"))

@@ -77,6 +77,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` order) under
+    the DDL ``schema``. Every frame the engine builds from Python values
+    goes through here.
+
+    The rows become a ``pyarrow.Table``, which the JVM reads itself: the
+    frame plans as a ``LocalTableScan``. Built from a list of tuples it
+    would plan a PythonRDD (``Scan ExistingRDD``), and every action on it
+    would start Python workers (~0.3 s per action at local[4]). Columns
+    are inferred from the values, then cast to the schema with Arrow's
+    safe cast, so a lossy value (1.5 for a ``bigint``) raises instead of
+    being truncated."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    target = to_arrow_schema(StructType.fromDDL(schema))
+    if rows:
+        cols = [pa.array(c) for c in zip(*rows, strict=True)]
+        table = pa.Table.from_arrays(cols, names=target.names)
+    else:
+        table = target.empty_table()
+    return spark.createDataFrame(table.cast(target))
+
+
 def group_apply(df: DataFrame, group_cols, fn, schema, *,
                 max_groups: int | None = None) -> DataFrame:
     """Pandas grouped map of ``fn`` over ``group_cols`` (``groupBy``, then

@@ -225,16 +225,17 @@ def streaming_curate(
 
     from anomaly_detection_spark.audit import AUDIT_SCHEMA
     from anomaly_detection_spark.functions.curation import curate
+    from anomaly_detection_spark.session import local_frame
 
     rid = run_id or _uuid.uuid4().hex[:12]
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         key = f"batch_{batch_id}"
         todo = ledger.pending(
-            spark.createDataFrame([(key,)], "partition_key string"))
+            local_frame(spark, [(key,)], "partition_key string"))
         if todo.isEmpty():
             return                       # redelivered after a crash
-        t0 = _time.time()
+        t0 = _time.perf_counter()
         curated, report = curate(batch_df, config=config)
         obs = Observation()
         to_write = curated.observe(
@@ -255,14 +256,15 @@ def streaming_curate(
         n_near_drop = stages["near_dedup"][3]
         n_out = stages["near_dedup"][2]
         m = obs.get
-        ledger.append(spark.createDataFrame(
+        ledger.append(local_frame(
+            spark,
             [(key, rid, _time.time(), int(n_out),
               int(m["nv"]) if m["nv"] is not None else 0,
               int(m["fp"]) if m["fp"] is not None else 0,
               float(m["mean"]) if m["mean"] is not None else float("nan"),
               float(m["m2"]) if m["m2"] is not None else float("nan"),
               int(n_gate_drop), int(n_near_drop), 0,
-              "pass", _time.time() - t0)],
+              "pass", _time.perf_counter() - t0)],
             AUDIT_SCHEMA,
         ))
 

@@ -252,11 +252,14 @@ def test_grouped_fanout_survives_aqe_coalescing(spark, sf_dir_small,
 @pytest.mark.parametrize("api, owner", [
     (".applyInPandas(", ("session.py", ["group_apply"])),
     (".applyInPandasWithState(", ("streaming/stateful.py", ["_stateful"])),
-], ids=["applyInPandas", "applyInPandasWithState"])
-def test_one_owner_per_pandas_api(api, owner):
-    """Every grouped pandas stage goes through ``session.group_apply``
-    and every stateful streaming stage through ``stateful._stateful``,
-    so the fan-out pin and the state load/store each live in one place."""
+    (".createDataFrame(", ("session.py", ["local_frame"])),
+], ids=["applyInPandas", "applyInPandasWithState", "createDataFrame"])
+def test_one_owner_per_boundary_api(api, owner):
+    """Every grouped pandas stage goes through ``session.group_apply``,
+    every stateful streaming stage through ``stateful._stateful`` and
+    every driver-side frame through ``session.local_frame``, so the
+    fan-out pin, the state load/store and the Arrow build each live in
+    one place."""
     import ast
     import pathlib
 
