@@ -3,22 +3,24 @@ near-duplicate, each designed around its shuffle:
 
 * exact: sha256 hash-aggregate; one shuffle on the 32-byte digest, keeps
   the lowest doc id per digest (deterministic winner).
-* MinHash + LSH: shingles -> H minhashes (pure higher-order-function
-  expressions, codegen'd) -> B bands -> shuffle on (band, band_hash) only;
-  candidate pairs verified with exact Jaccard on shingle sets. The
-  all-pairs O(n^2) never materializes — only same-bucket pairs do.
+* MinHash + LSH: shingles -> H minhashes (explode + codegen'd min
+  aggregates) -> B bands; candidate pairs verified with exact Jaccard on
+  shingle sets. The all-pairs O(n^2) never materializes — only
+  same-bucket pairs do.
 * SimHash: 64-bit token-weighted signature in mapInPandas (numpy bit
-  ops), near-dup = Hamming distance <= r via 4-block pigeonhole join
-  (any r<=3 difference leaves one identical 16-bit block -> join key).
+  ops), near-dup = Hamming distance <= r via 4-block pigeonhole buckets
+  (any r<=3 difference leaves one identical 16-bit block -> shared
+  bucket), then exact popcount verify.
 * embedding cosine near-dup: random-hyperplane sign buckets then exact
   cosine verify inside buckets (see similarity.py for the generic ANN).
 
-All joins here are self-joins keyed by small buckets; skew (a viral
-shingle/bucket) is bounded by ``max_bucket`` guards that drop
-pathologically hot buckets with a logged count, the standard trade in
-web-scale dedup.
+Every near-dup path builds its candidates with :func:`_bucket_pairs`:
+one shuffle groups members per bucket and each bucket emits its own
+pairs — no self-join, which would recompute the signature pipeline per
+side. MinHash and embedding drop pathologically hot buckets (a viral
+shingle or hyperplane cell) with a ``max_bucket`` bound, the standard
+trade in web-scale dedup; SimHash keeps every bucket.
 """
-
 from __future__ import annotations
 
 from typing import Iterator
@@ -26,8 +28,9 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from anomaly_detection_spark.functions.text import char_shingles
 
@@ -42,6 +45,59 @@ def _scope_candidate_persist(pairs: DataFrame, cand_ids: DataFrame) -> DataFrame
     out = pairs.localCheckpoint(eager=True)
     cand_ids.unpersist()
     return out
+
+
+def _bucket_pairs(rows: DataFrame, bucket_cols: list[str], member: Column,
+                  *, max_bucket: int | None = None) -> DataFrame:
+    """Distinct in-bucket pairs ``(id_a, id_b)`` of ``member`` values
+    (id_a < id_b in array-sort order) for every bucket of ``rows`` with
+    2..``max_bucket`` members (no upper bound when ``None``).
+
+    One shuffle groups the members per bucket and each bucket emits its
+    own pair combinations — NO self-join (a self-join would recompute
+    the whole signature pipeline for each side). The bound caps the pair
+    fan-out of a bucket at max_bucket^2/2."""
+    m = F.col("_m")
+    size = F.size(m)
+    keep = size > 1
+    if max_bucket is not None:
+        keep = keep & (size <= max_bucket)
+    pairs = F.flatten(F.transform(
+        m, lambda x, i: F.transform(
+            F.slice(m, i + 2, size),
+            lambda y: F.struct(x.alias("id_a"), y.alias("id_b"))),
+    ))
+    return (
+        rows.groupBy(*bucket_cols)
+        .agg(F.array_sort(F.collect_list(member)).alias("_m"))
+        .filter(keep)
+        .select(F.explode(pairs).alias("p"))
+        .select("p.id_a", "p.id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _candidates(banded: DataFrame, bucket_cols: list[str], *,
+                max_bucket: int,
+                persist_registry: list | None) -> tuple[DataFrame, DataFrame]:
+    """Candidate pairs of the ``_id`` rows of ``banded`` that share a
+    bucket, persisted, plus the set of docs (``_id``) in any pair.
+
+    The pairs feed BOTH the verify semi-join and the final pair join;
+    without materialization the whole signature pipeline executes twice
+    (measured 2.5x on sf0.01 — the two consumers' subplans differ, so
+    Spark never plans a ReusedExchange). Candidates are a vanishing
+    fraction of the corpus, so the persist is small. It is appended to
+    ``persist_registry`` (when given) for the caller to release."""
+    cand_ids = _bucket_pairs(banded, bucket_cols, F.col("_id"),
+                             max_bucket=max_bucket)
+    cand_ids = cand_ids.persist(StorageLevel.MEMORY_AND_DISK)
+    if persist_registry is not None:
+        persist_registry.append(cand_ids)
+    cand_docs = cand_ids.select(F.col("id_a").alias("_id")).union(
+        cand_ids.select(F.col("id_b").alias("_id"))
+    ).distinct()
+    return cand_ids, cand_docs
 
 
 # ---------------------------------------------------------------------------
@@ -83,19 +139,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str, *,
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def minhash_signature(shingles, n_hashes: int = 16):
-    """H minhash values as an array column: for each seed, min over
-    xxhash64(shingle, seed)-style salted hashes. Empty shingle set ->
-    nulls (never matches)."""
-    sigs = [
-        F.array_min(
-            F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(i)))
-        )
-        for i in range(n_hashes)
-    ]
-    return F.array(*sigs)
-
 
 def minhash_lsh_pairs(
     df: DataFrame, id_col: str, text_col: str, *,
@@ -142,7 +185,7 @@ def minhash_lsh_pairs(
     )
 
     # Stage 2 — bands as NARROW rows (_id, band, bh): never shuffle the
-    # multi-KB shingle arrays through the band explode or the self-join.
+    # multi-KB shingle arrays through the band explode or the bucket shuffle.
     banded = sig.select(
         "_id",
         F.explode(
@@ -159,45 +202,13 @@ def minhash_lsh_pairs(
         ).alias("bb"),
     ).select("_id", "bb.band", "bb.bh")
 
-    # Candidate pairs WITHOUT a self-join (a self-join would recompute the
-    # whole signature pipeline for each side): one shuffle groups ids per
-    # (band, bucket-hash); pairs are generated inside each bucket with
-    # array combinatorics. Pathologically hot buckets (viral boilerplate)
-    # are dropped by the max_bucket bound, so pair fan-out per bucket is
-    # capped at max_bucket^2/2.
-    ids = F.array_sort(F.collect_list("_id"))
-    buckets = (
-        banded.groupBy("band", "bh").agg(ids.alias("_ids"))
-        .filter((F.size("_ids") > 1) & (F.size("_ids") <= max_bucket))
-    )
-    sz = F.size("_ids")
-    pair_structs = F.flatten(F.transform(
-        F.col("_ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("_ids"), i + 2, sz), lambda y: F.struct(
-                x.alias("id_a"), y.alias("id_b"))),
-    ))
-    cand_ids = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # consumed by BOTH the verify semi-join and the final pair join; without
-    # materialization the whole signature pipeline executes twice (measured
-    # 2.5x on sf0.01 — the two consumers' subplans differ, so Spark never
-    # plans a ReusedExchange). LSH candidates are a vanishing fraction of
-    # the corpus, so this is small.
-    from pyspark.storagelevel import StorageLevel
-    cand_ids = cand_ids.persist(StorageLevel.MEMORY_AND_DISK)
-    if persist_registry is not None:
-        persist_registry.append(cand_ids)
+    cand_ids, cand_docs = _candidates(
+        banded, ["band", "bh"], max_bucket=max_bucket,
+        persist_registry=persist_registry)
 
     # Stage 3 — exact-Jaccard verify: shingles recomputed ONLY for docs
     # that appear in a candidate pair (broadcast semi-join pushdown), so
     # the expensive arrays exist for a vanishing fraction of the corpus.
-    cand_docs = cand_ids.select(F.col("id_a").alias("_id")).union(
-        cand_ids.select(F.col("id_b").alias("_id"))
-    ).distinct()
     # join BEFORE computing shingles — a projection above the join would
     # evaluate the (interpreted) shingle HOF for every doc in the corpus
     sh = (
@@ -345,29 +356,13 @@ def simhash_near_dup_pairs(
             ])
         ).alias("bb"),
     ).select("_id", "simhash", "bb.blk", "bb.bv")
-    # pairs via bucket grouping, not a self-join (a self-join would run the
-    # signature mapInPandas twice); each (blk, bv) bucket carries (id, sig)
-    # structs and emits its own pair combinations
-    members = F.array_sort(F.collect_list(F.struct(
-        F.col("_id").alias("i"), F.col("simhash").alias("s"))))
-    buckets = (
-        blocks.groupBy("blk", "bv").agg(members.alias("_m"))
-        .filter(F.size("_m") > 1)
-    )
-    sz = F.size("_m")
-    pair_structs = F.flatten(F.transform(
-        F.col("_m"),
-        lambda x, i: F.transform(
-            F.slice(F.col("_m"), i + 2, sz),
-            lambda y: F.struct(
-                x["i"].alias("id_a"), y["i"].alias("id_b"),
-                x["s"].alias("sa"), y["s"].alias("sb"))),
-    ))
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b", "p.sa", "p.sb")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # each (blk, bv) bucket carries (id, sig) members, so the verify
+    # needs no join back to the signatures
+    cand = _bucket_pairs(
+        blocks, ["blk", "bv"],
+        F.struct(F.col("_id").alias("i"), F.col("simhash").alias("s")),
+    ).select(F.col("id_a.i").alias("id_a"), F.col("id_b.i").alias("id_b"),
+             F.col("id_a.s").alias("sa"), F.col("id_b.s").alias("sb"))
     hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
     return (
         cand.withColumn("hamming", hamming)
@@ -392,9 +387,11 @@ def resolve_components(
 
     Distributed min-label propagation: every node starts labeled with
     itself; each round joins labels across edges both ways and keeps the
-    elementwise min; stops when a round changes nothing (checked with one
-    small count — the label frame is O(nodes-in-pairs), a vanishing
-    fraction of the corpus). Rounds needed = component diameter (near-dup
+    elementwise min; stops when a round changes nothing. The round's
+    frame carries ``changed = n_min < component`` and an ``Observation``
+    of its OR rides the round's eager checkpoint, so detecting the fixed
+    point costs no job of its own (an empty label frame observes NULL,
+    which also stops). Rounds needed = component diameter (near-dup
     chains are short); ``max_iter`` bounds pathological chains. Each
     round is one broadcast-or-shuffle join + hash agg on narrow
     (id, label) rows.
@@ -404,8 +401,6 @@ def resolve_components(
     still nests the previous round's logical plan, so by ~20 rounds the
     plan tree itself is exponential and the driver dies building it
     (observed: OOM in plan-string generation; PLANS.md round-2 lesson)."""
-    from pyspark.storagelevel import StorageLevel
-
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"),
@@ -424,22 +419,21 @@ def resolve_components(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("component").alias("n_min"))
         )
-        new_labels = (
+        changed = Observation()
+        labels = (
             labels.join(neighbor_min, "id", "left")
-            .select("id", F.least("component", F.coalesce("n_min", "component"))
-                    .alias("component"))
+            .select("id",
+                    F.least("component", F.coalesce("n_min", "component"))
+                    .alias("component"),
+                    F.coalesce(F.col("n_min") < F.col("component"),
+                               F.lit(False)).alias("changed"))
+            .observe(changed, F.bool_or("changed").alias("c"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), "id")
-            .filter(F.col("component") != F.col("old"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if not changed.get["c"]:
             break
     edges.unpersist()
-    return labels
+    return labels.select("id", "component")
 
 
 def dedup_keep_set(
@@ -479,7 +473,7 @@ def embedding_near_dup_pairs(
        the false-negative rate (a near pair is missed only if it splits
        in EVERY table).
     3. verify — vectors are re-read only for docs appearing in a candidate
-       pair (broadcast semi-join pushdown), exact cosine on the pair join.
+       pair (semi-join pushdown), exact cosine on the pair join.
     """
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
@@ -507,31 +501,9 @@ def embedding_near_dup_pairs(
     banded = df.select(id_col, vec_col).mapInPandas(
         bucketize, schema=f"_id {_idt}, tbl int, bkt bigint")
 
-    ids = F.array_sort(F.collect_list("_id"))
-    buckets = (
-        banded.groupBy("tbl", "bkt").agg(ids.alias("_ids"))
-        .filter((F.size("_ids") > 1) & (F.size("_ids") <= max_bucket))
-    )
-    sz = F.size("_ids")
-    pair_structs = F.flatten(F.transform(
-        F.col("_ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("_ids"), i + 2, sz),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b"))),
-    ))
-    cand_ids = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    from pyspark.storagelevel import StorageLevel
-    cand_ids = cand_ids.persist(StorageLevel.MEMORY_AND_DISK)
-    if persist_registry is not None:
-        persist_registry.append(cand_ids)
-
-    cand_docs = cand_ids.select(F.col("id_a").alias("_id")).union(
-        cand_ids.select(F.col("id_b").alias("_id"))
-    ).distinct()
+    cand_ids, cand_docs = _candidates(
+        banded, ["tbl", "bkt"], max_bucket=max_bucket,
+        persist_registry=persist_registry)
     # no broadcast hint: the candidate-doc set grows with corpus size;
     # AQE broadcasts it only while it is actually small
     vecs = (

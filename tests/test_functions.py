@@ -134,6 +134,21 @@ def test_minhash_lsh_finds_near_dups(spark, dup_docs):
     assert all(r["jaccard"] >= 0.6 for r in pairs)
 
 
+def test_minhash_lsh_max_bucket_bound(spark):
+    """Identical docs share every band bucket: a bucket of max_bucket
+    members still yields all its pairs, one more member drops it."""
+    text = "the quick brown fox jumps over the lazy dog " * 4
+
+    def pairs(n):
+        docs = spark.createDataFrame([(i, text) for i in range(n)],
+                                     "doc_id long, text string")
+        return {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(
+            docs, "doc_id", "text", max_bucket=4).collect()}
+
+    assert pairs(4) == {(i, j) for i in range(4) for j in range(i + 1, 4)}
+    assert pairs(5) == set()
+
+
 def test_ngram_jaccard_matches_python_oracle(spark, dup_docs):
     sample = dup_docs.filter(
         (F.col("doc_id") < 20) | (F.col("doc_id") >= 100_000)

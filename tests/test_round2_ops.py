@@ -519,6 +519,67 @@ def test_resolve_components_random_graphs_match_union_find(spark):
         assert got == expected, f"seed {seed}"
 
 
+def test_resolve_components_runs_no_extra_action_per_round(spark):
+    """A round's change flag rides its eager checkpoint as an
+    Observation: while resolve_components runs on a chain (one round per
+    hop), no count() or collect() may fire, and the labels still equal
+    union-find."""
+    from anomaly_detection_spark.functions.dedup import resolve_components
+
+    edges = [(i, i + 1) for i in range(6)] + [(20, 21), (21, 22)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    parent = {v: v for e in edges for v in e}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    expected = {v: find(v) for v in parent}
+
+    def refuse(self, *a, **kw):
+        raise AssertionError("resolve_components ran an extra action")
+
+    cls = type(pairs)
+    saved = cls.count, cls.collect
+    cls.count = cls.collect = refuse
+    try:
+        comp = resolve_components(pairs)
+    finally:
+        cls.count, cls.collect = saved
+    assert {r["id"]: r["component"] for r in comp.collect()} == expected
+
+
+def test_resolve_components_empty_pairs_returns(spark):
+    """No edges: the first round's Observation is NULL and must end the
+    loop — a missing metric would block forever, so run it on a daemon
+    thread under a timeout."""
+    import threading
+
+    from anomaly_detection_spark.functions.dedup import resolve_components
+
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    out = []
+
+    def run():
+        try:
+            out.append(resolve_components(empty))
+        except Exception as e:  # re-raised on the test thread
+            out.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "resolve_components hung on an empty pair frame"
+    if isinstance(out[0], Exception):
+        raise out[0]
+    assert out[0].columns == ["id", "component"]
+    assert out[0].count() == 0
+
+
 def test_registry_references_consistent():
     """Every name referenced by bench.py's HEADLINE and the registry's
     ordering lists must exist in REGISTRY (typo guard), and the driver's

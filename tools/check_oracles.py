@@ -8,15 +8,16 @@ Usage: python tools/check_oracles.py [name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second clone checks its own engine
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-import os
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 
 

@@ -27,10 +27,14 @@ import subprocess
 import sys
 import tempfile
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# both child sources take the checkout root as argv[1], so a second
+# clone measures its own engine
 GEN = r"""
 import sys
-sys.path.insert(0, "/root/repo")
-rows, path = int(sys.argv[1]), sys.argv[2]
+sys.path.insert(0, sys.argv[1])
+rows, path = int(sys.argv[2]), sys.argv[3]
 from anomaly_detection_spark.session import get_spark
 from anomaly_detection_spark.corpus import generate_code_corpus
 spark = get_spark("scale-gen", cores=32, shuffle_partitions=32)
@@ -40,8 +44,8 @@ spark.stop()
 
 WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
-cores, path = int(sys.argv[1]), sys.argv[2]
+sys.path.insert(0, sys.argv[1])
+cores, path = int(sys.argv[2]), sys.argv[3]
 from anomaly_detection_spark.session import get_spark
 from anomaly_detection_spark.operators.constraints import corpus_constraint_codes
 from pyspark.sql import functions as F
@@ -72,7 +76,7 @@ spark.stop()
 
 def run_level(cores: int, path: str) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", WORKER, str(cores), path],
+        [sys.executable, "-c", WORKER, ROOT, str(cores), path],
         capture_output=True, text=True, check=True,
     )
     return json.loads(out.stdout.strip().splitlines()[-1])
@@ -91,7 +95,7 @@ def main() -> int:
         tempfile.gettempdir(), f"scale_corpus_{args.rows}"
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        subprocess.run([sys.executable, "-c", GEN, str(args.rows), path],
+        subprocess.run([sys.executable, "-c", GEN, ROOT, str(args.rows), path],
                        check=True, capture_output=True, text=True)
 
     n, n4 = args.n_cores, args.n_cores * 4
