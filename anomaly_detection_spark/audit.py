@@ -10,14 +10,16 @@ with a proper ledger:
 * each partition's run appends ONE audit row: lineage (input fingerprint,
   row count), column stats (Welford moments), check metrics (per-check
   error/warning counts), verdict, wall time, run id;
-* resume = anti-join the partition list against committed audit rows —
-  only pending partitions are recomputed.
+* resume = a filter ``NOT partition_key IN (committed keys)`` on the
+  input. On the catalog layout it lands in the scan's
+  ``PartitionFilters``, so committed buckets' files are never opened;
+* one commit = one aggregate job over every pending partition plus one
+  ledger append.
 
-Sandbox storage is a parquet directory in append mode (one file per
-commit, which is atomic-enough: a killed write leaves a missing file, not
-a torn row). On a real cluster the same writer targets an Iceberg table
-(``.writeTo(...).append()`` is transactional); the format is chosen by
-``audit_format``.
+Storage is a parquet directory in append mode (one file per commit,
+which is atomic-enough: a killed write leaves a missing file, not a torn
+row). ``compact()`` and the crash recovery rename directories, so the
+ledger lives on a filesystem.
 """
 
 from __future__ import annotations
@@ -43,11 +45,9 @@ AUDIT_SCHEMA = (
 
 
 class AuditLedger:
-    def __init__(self, spark: SparkSession, path: str,
-                 audit_format: str = "parquet"):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.fmt = audit_format
 
     def _read(self) -> DataFrame | None:
         """The ledger, or None if none exists yet. Any other read failure
@@ -55,7 +55,7 @@ class AuditLedger:
         every partition and append duplicate rows."""
         self._recover()
         try:
-            return self.spark.read.format(self.fmt).load(self.path)
+            return self.spark.read.parquet(self.path)
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
@@ -68,17 +68,16 @@ class AuditLedger:
             return local_frame(self.spark, [], AUDIT_SCHEMA)
         return df
 
-    def pending(self, partitions: DataFrame, key: str = "partition_key") -> DataFrame:
-        """Anti-join: partitions with no committed audit row. With no
-        ledger yet every partition is pending, and no join is planned."""
+    def committed_keys(self) -> list[str]:
+        """The distinct committed partition keys — the one resume rule.
+        With no ledger yet it returns [] and runs no Spark job."""
         df = self._read()
         if df is None:
-            return partitions
-        done = df.select(F.col("partition_key").alias(key)).distinct()
-        return partitions.join(done, on=key, how="left_anti")
+            return []
+        return [r[0] for r in df.select("partition_key").distinct().collect()]
 
     def append(self, rows: DataFrame) -> None:
-        rows.write.format(self.fmt).mode("append").save(self.path)
+        rows.write.mode("append").parquet(self.path)
 
     def compact(self, target_files: int = 1) -> int:
         """Rewrite the ledger into ``target_files`` files (append mode
@@ -97,7 +96,7 @@ class AuditLedger:
         path = self.path.rstrip("/")
         new, old = path + ".compact", path + ".old"
         shutil.rmtree(new, ignore_errors=True)
-        df.coalesce(target_files).write.format(self.fmt).save(new)
+        df.coalesce(target_files).write.parquet(new)
         os.replace(path, old)
         os.replace(new, path)
         shutil.rmtree(old)
@@ -128,58 +127,56 @@ def run_partitioned_checks(
 ) -> DataFrame:
     """Execute a compiled check suite partition-wise with resume.
 
-    ``df`` must already carry the per-row check code columns. One Spark
-    job aggregates EVERY pending partition's metrics (no per-partition
-    driver loop — the grouping is distributed) and collects them, one
-    row per partition; the rows are appended to the ledger in one
-    single-file write. ``wall_s`` is that aggregation's wall time, shared
-    by the rows of one commit. Verdict per partition: 'fail' if
-    error_rate > fail_on_error_rate else 'pass'.
+    ``df`` must already carry the per-row check code columns. Committed
+    partitions are filtered out of ``df`` (on a partitioned scan, before
+    any file is opened); then one Spark job aggregates EVERY pending
+    partition's metrics (no per-partition driver loop — the grouping is
+    distributed) and collects them, one row per partition; the rows are
+    appended to the ledger in one single-file write. ``wall_s`` is that
+    aggregation's wall time, shared by the rows of one commit. Verdict
+    per partition: 'fail' if error_rate > fail_on_error_rate else 'pass'.
 
     Returns the audit rows written this run (empty if nothing pending).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    parts = df.select(F.col(partition_col).cast("string").alias("partition_key")).distinct()
-    todo = ledger.pending(parts).cache()
-    try:
-        if todo.isEmpty():
-            return local_frame(spark, [], AUDIT_SCHEMA)
-        scoped = df.withColumn(
-            "partition_key", F.col(partition_col).cast("string")
-        ).join(F.broadcast(todo), on="partition_key", how="left_semi")
+    key = F.col(partition_col).cast("string")
+    done = ledger.committed_keys()
+    # rows with a null key belong to no partition and are never audited
+    # (NOT IN drops them as well)
+    scoped = df.withColumn("partition_key", key).filter(
+        ~key.isin(done) if done else key.isNotNull())
 
-        err = sum(F.when(F.col(c) == -1, 1).otherwise(0) for c in code_cols)
-        warn = sum(F.when(F.col(c) == 0, 1).otherwise(0) for c in code_cols)
-        undef = sum(F.when(F.col(c) == 2, 1).otherwise(0) for c in code_cols)
-        v = F.col(value_col).cast("double")
+    err = sum(F.when(F.col(c) == -1, 1).otherwise(0) for c in code_cols)
+    warn = sum(F.when(F.col(c) == 0, 1).otherwise(0) for c in code_cols)
+    undef = sum(F.when(F.col(c) == 2, 1).otherwise(0) for c in code_cols)
+    v = F.col(value_col).cast("double")
 
-        t0 = time.perf_counter()
-        agg = scoped.groupBy("partition_key").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            # non-null value count: mean is over non-null values only, so
-            # exact totals recover as mean * n_value (NOT mean * n_rows,
-            # which overcounts whenever the value column has nulls)
-            F.count(v).alias("n_value"),
-            # order-insensitive lineage fingerprint of the partition's input
-            # (bit_xor never overflows, unlike sum under ANSI mode)
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns
-                                   if not c.startswith("c_") and c != "partition_key"]))
-            .alias("input_fingerprint"),
-            F.avg(v).alias("mean"),
-            (F.var_pop(v) * F.count(v)).alias("m2"),
-            F.sum(err).cast("bigint").alias("n_error"),
-            F.sum(warn).cast("bigint").alias("n_warning"),
-            F.sum(undef).cast("bigint").alias("n_undefined"),
-        ).collect()
-        wall = time.perf_counter() - t0
-        committed_at = time.time()
-        audit = local_frame(spark, [
-            (r.partition_key, run_id, committed_at, r.n_rows, r.n_value,
-             r.input_fingerprint, r.mean, r.m2,
-             r.n_error, r.n_warning, r.n_undefined,
-             "fail" if r.n_error > r.n_rows * fail_on_error_rate else "pass",
-             wall) for r in agg], AUDIT_SCHEMA)
+    t0 = time.perf_counter()
+    agg = scoped.groupBy("partition_key").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        # non-null value count: mean is over non-null values only, so
+        # exact totals recover as mean * n_value (NOT mean * n_rows,
+        # which overcounts whenever the value column has nulls)
+        F.count(v).alias("n_value"),
+        # order-insensitive lineage fingerprint of the partition's input
+        # (bit_xor never overflows, unlike sum under ANSI mode)
+        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns
+                               if not c.startswith("c_") and c != "partition_key"]))
+        .alias("input_fingerprint"),
+        F.avg(v).alias("mean"),
+        (F.var_pop(v) * F.count(v)).alias("m2"),
+        F.sum(err).cast("bigint").alias("n_error"),
+        F.sum(warn).cast("bigint").alias("n_warning"),
+        F.sum(undef).cast("bigint").alias("n_undefined"),
+    ).collect()
+    wall = time.perf_counter() - t0
+    committed_at = time.time()
+    audit = local_frame(spark, [
+        (r.partition_key, run_id, committed_at, r.n_rows, r.n_value,
+         r.input_fingerprint, r.mean, r.m2,
+         r.n_error, r.n_warning, r.n_undefined,
+         "fail" if r.n_error > r.n_rows * fail_on_error_rate else "pass",
+         wall) for r in agg], AUDIT_SCHEMA)
+    if agg:
         ledger.append(audit.coalesce(1))
-        return audit
-    finally:
-        todo.unpersist()
+    return audit

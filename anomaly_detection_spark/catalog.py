@@ -9,7 +9,8 @@ preserves the two properties the engine depends on:
 * **partition pruning** — a filter on the bucket column never touches
   other partitions' files (`PartitionFilters` in the scan, tested);
 * **bucket = resumable work unit** — the audit ledger keys on the same
-  bucket, so resume reads only pending partitions' files.
+  bucket, and ``audit.run_partitioned_checks`` filters committed keys
+  out of its input, so a resume never opens committed buckets' files.
 
 Swapping to Iceberg is the write call (``writeTo(...).partitionedBy(
 bucket(N, col))``) plus a catalog config — reader code is unchanged.
@@ -40,12 +41,6 @@ def write_partitioned(df: DataFrame, path: str, *, key: str = "repo",
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def read_buckets(spark: SparkSession, path: str, buckets) -> DataFrame:
-    """Read ONLY the given buckets — the filter lands in PartitionFilters,
-    so untouched buckets' files are never opened (the resume path)."""
-    return read_table(spark, path).filter(F.col(BUCKET_COL).isin(list(buckets)))
 
 
 def scan_has_partition_pruning(df: DataFrame) -> bool:

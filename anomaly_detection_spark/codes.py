@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -48,6 +50,16 @@ def ladder_code(vn: Column, warning_stages: Sequence[float]) -> Column:
         .when(vn < -1.0, F.lit(ERROR_CODE))
         .otherwise(expr)
     )
+
+
+def ladder_code_np(vn: np.ndarray, warning_stages: Sequence[float]) -> np.ndarray:
+    """:func:`ladder_code` over a numpy array (NaN -> OK, as in SQL)."""
+    code = np.ones(len(vn), dtype=np.int32)
+    if len(warning_stages) > 0:
+        code[np.abs(vn) > min(warning_stages)] = WARNING_CODE
+    code[vn > 1.0] = ERROR_CODE
+    code[vn < -1.0] = ERROR_CODE
+    return code
 
 
 def ladder_status(

@@ -28,14 +28,3 @@ def combine_or(codes: Sequence[Column | str]) -> Column:
     unless it is the only value)."""
     cols = [F.col(c) if isinstance(c, str) else c for c in codes]
     return F.least(*cols) if len(cols) > 1 else cols[0]
-
-
-def per_row_percent_score(codes: Sequence[Column | str]) -> Column:
-    """Instantaneous PercentScore numerator (combination.py:186-200):
-    (1*warnings + 2*errors) / (2*K) in [0, 1]."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in codes]
-    score = sum(
-        F.when(c == 0, F.lit(1.0)).when(c == -1, F.lit(2.0)).otherwise(F.lit(0.0))
-        for c in cols
-    )
-    return score / (2.0 * len(cols))

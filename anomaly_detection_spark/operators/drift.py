@@ -23,10 +23,12 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from anomaly_detection_spark.codes import ladder_code
+from anomaly_detection_spark.codes import ladder_code, ladder_code_np
 from anomaly_detection_spark.session import local_frame
 
 EPS = 1e-6  # PSI zero-bin smoothing (standard practice)
@@ -151,14 +153,7 @@ def ks_check(
                        F.kll_sketch_get_rank_double("b", xs)).first()
         ks = float(max(abs(ra - rb) for ra, rb in zip(r[0], r[1])))
     vn = 2.0 * (ks - (UL + LL) / 2.0) / (UL - LL)
-    stages = sorted(warning_stages)
-    if vn > 1.0 or vn < -1.0:
-        code = -1
-    elif stages and abs(vn) > stages[0]:
-        code = 0
-    else:
-        code = 1
-    return ks, code
+    return ks, int(ladder_code_np(np.array([vn]), warning_stages)[0])
 
 
 def ks_exact(base: DataFrame, cur: DataFrame, value: str, *,

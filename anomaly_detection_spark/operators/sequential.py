@@ -26,19 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.codes import UNDEFINED_CODE  # noqa: F401 (API)
+from anomaly_detection_spark.codes import ladder_code_np
 from anomaly_detection_spark.session import group_apply
 
 SERIES_BUCKETS = 64
-
-
-def _ladder_codes_np(vn: np.ndarray, warning_stages: Sequence[float]) -> np.ndarray:
-    """Vectorized ladder (same semantics as codes.ladder_code)."""
-    code = np.ones(len(vn), dtype=np.int32)
-    if len(warning_stages) > 0:
-        code[np.abs(vn) > min(warning_stages)] = 0
-    code[vn > 1.0] = -1
-    code[vn < -1.0] = -1
-    return code
 
 
 def _grouped(df: DataFrame, keys, order: str, fn, schema: str) -> DataFrame:
@@ -91,7 +82,7 @@ def ema_check(
         vn = 2.0 * (ema - (UL + LL) / 2.0) / (UL - LL)
         out = pdf[cols].copy()
         out["ema"] = ema
-        out["code"] = _ladder_codes_np(vn, warning_stages)
+        out["code"] = ladder_code_np(vn, warning_stages)
         return out
 
     return _grouped(df.select(*cols, value), keys_l, order, fn,
@@ -134,7 +125,7 @@ def macd_check(
         vn = 2.0 * (macd - (UL + LL) / 2.0) / (UL - LL)
         out = pdf[cols].copy()
         out["macd"] = macd
-        out["code"] = _ladder_codes_np(vn, _macd_stages(warning_stages))
+        out["code"] = ladder_code_np(vn, _macd_stages(warning_stages))
         return out
 
     return _grouped(df.select(*cols, value), keys_l, order, fn,
@@ -228,7 +219,7 @@ def cumulative_check(
                            pdf[value].to_numpy(dtype=np.float64), sids)
         out = pdf[cols].copy()
         out["cusum"] = c
-        out["code"] = _ladder_codes_np(c, warning_stages)
+        out["code"] = ladder_code_np(c, warning_stages)
         return out
 
     return _grouped(df.select(*cols, value), keys_l, order, fn,
@@ -306,7 +297,7 @@ def ema_suite_check(
         vn = 2.0 * (e - (UL + LL) / 2.0) / (UL - LL)
         out = pdf[cols].copy()
         out["ema"] = e
-        out["code_ema"] = _ladder_codes_np(vn, warning_stages)
+        out["code_ema"] = ladder_code_np(vn, warning_stages)
         out["code_pctl"] = code_pctl
         return out
 
@@ -341,9 +332,9 @@ def macd_cusum_check(
         c = _propagate_nan(_decayed_cusum(delta, sids, decay), v, sids)
         out = pdf[cols].copy()
         out["macd"] = macd
-        out["code_macd"] = _ladder_codes_np(vn, _macd_stages(macd_stages))
+        out["code_macd"] = ladder_code_np(vn, _macd_stages(macd_stages))
         out["cusum"] = c
-        out["code_cusum"] = _ladder_codes_np(c, cusum_stages)
+        out["code_cusum"] = ladder_code_np(c, cusum_stages)
         return out
 
     return _grouped(df.select(*cols, value), keys_l, order, fn,
@@ -409,7 +400,7 @@ def last_n_average_repair(
         v = g[value].to_numpy().astype(np.float64)
         vn, repaired = _last_n_repair_series(v, N=N, mid=mid, half=half)
         out = g[cols].copy()
-        out["code"] = _ladder_codes_np(vn, warning_stages)
+        out["code"] = ladder_code_np(vn, warning_stages)
         out["suggested_value"] = repaired
         out["vn_repaired"] = (repaired - mid) / half
         return out
@@ -439,7 +430,7 @@ def periodic_last_n_average_repair(
         vn, repaired = _periodic_repair_series(v, N=N, period=period,
                                                mid=mid, half=half)
         out = g[cols].copy()
-        out["code"] = _ladder_codes_np(vn, warning_stages)
+        out["code"] = ladder_code_np(vn, warning_stages)
         out["suggested_value"] = repaired
         return out
 
@@ -530,7 +521,7 @@ def repair_suite(
         _, rep_p = _periodic_repair_series(v, N=periodic_n, period=period,
                                            mid=mid, half=half)
         out = g[cols].copy()
-        codes = _ladder_codes_np(vn, warning_stages)
+        codes = ladder_code_np(vn, warning_stages)
         out["code_last_n"] = codes
         out["suggested_last_n"] = rep_l
         out["code_periodic"] = codes
@@ -624,7 +615,7 @@ def filtering_check(
         y, _ = lfilter(b, a, x, zi=lfilter_zi(b, a))
         vn = (y - mid) / half
         if mode == 0:
-            code = _ladder_codes_np(vn, warning_stages)
+            code = ladder_code_np(vn, warning_stages)
         else:
             deviation = (x - y) / (UL - LL)
             if len(warning_stages) > 0:

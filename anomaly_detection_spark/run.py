@@ -122,18 +122,20 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description="PySpark validation engine")
     p.add_argument("--input", default=None,
                    help="parquet/Iceberg path of (repo,path,commit,lang,content);"
-                        " omit to use the deterministic synthetic corpus")
+                        " its 'bucket' column, if any (catalog layout), is the"
+                        " resumable work unit; omit to use the deterministic"
+                        " synthetic corpus")
     p.add_argument("--rows", type=int, default=100_000,
                    help="synthetic corpus rows (when --input omitted)")
-    p.add_argument("--audit", default=None, help="audit ledger path (enables resume)")
+    p.add_argument("--audit", default=None,
+                   help="audit ledger path (enables resume: committed buckets"
+                        " are skipped, and on the catalog layout their files"
+                        " are never opened)")
     p.add_argument("--partition-buckets", type=int, default=64,
-                   help="repo-hash buckets = resumable work units")
+                   help="repo-hash buckets = resumable work units, when the"
+                        " input has no 'bucket' column")
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--shuffle-partitions", type=int, default=None)
-    p.add_argument("--partitioned-input", action="store_true",
-                   help="input uses the catalog bucket layout: resume "
-                        "prunes the SCAN to pending buckets "
-                        "(PartitionFilters), not just the work")
     p.add_argument("--json", action="store_true", help="emit one JSON line")
     # reference-workflow mode (the `python main.py -f -c conf.json` path):
     p.add_argument("--config", default=None,
@@ -173,14 +175,11 @@ def main(argv=None) -> int:
 
     from anomaly_detection_spark.operators.constraints import corpus_constraint_codes
 
-    if args.partitioned_input:
-        if BUCKET_COL not in corpus.columns:
-            raise SystemExit(
-                f"--partitioned-input requires a '{BUCKET_COL}' partition "
-                "column (write with catalog.write_partitioned)")
-        bucket = F.col(BUCKET_COL)
+    if BUCKET_COL in corpus.columns:
+        checked = corpus_constraint_codes(corpus, keep=[BUCKET_COL])
     else:
-        bucket = F.pmod(F.xxhash64("repo"), F.lit(args.partition_buckets))
+        checked = corpus_constraint_codes(corpus).withColumn(
+            BUCKET_COL, F.pmod(F.xxhash64("repo"), F.lit(args.partition_buckets)))
 
     code_cols = ["c_path_not_null", "c_commit_format", "c_lang_domain",
                  "c_content_len_border"]
@@ -188,24 +187,11 @@ def main(argv=None) -> int:
     if args.audit:
         from anomaly_detection_spark.audit import AuditLedger, run_partitioned_checks
 
-        ledger = AuditLedger(spark, args.audit)
-        if args.partitioned_input:
-            # static partition pruning for resume: committed buckets'
-            # FILES are never opened (PartitionFilters on the scan)
-            done = [int(r["partition_key"])
-                    for r in ledger.committed().select("partition_key")
-                    .distinct().collect()]
-            if done:
-                corpus = corpus.filter(~bucket.isin(done))
-            checked = corpus_constraint_codes(corpus, keep=[BUCKET_COL])
-        else:
-            checked = corpus_constraint_codes(corpus).withColumn(
-                BUCKET_COL, bucket)
         audit = run_partitioned_checks(
             spark, checked.withColumn("content_bytes",
                                       F.col("content_bytes").cast("double")),
             partition_col=BUCKET_COL, value_col="content_bytes",
-            code_cols=code_cols, ledger=ledger,
+            code_cols=code_cols, ledger=AuditLedger(spark, args.audit),
         )
         n_done = audit.count()
         totals = audit.agg(
@@ -220,11 +206,6 @@ def main(argv=None) -> int:
         errors = totals["errors"] or 0
         content_bytes = totals["content_bytes"] or 0.0
     else:
-        if args.partitioned_input:
-            checked = corpus_constraint_codes(corpus, keep=[BUCKET_COL])
-        else:
-            checked = corpus_constraint_codes(corpus).withColumn(
-                BUCKET_COL, bucket)
         agg = checked.agg(
             F.count(F.lit(1)).alias("rows"),
             sum(F.sum(F.when(F.col(c) == -1, 1).otherwise(0)) for c in code_cols)

@@ -29,7 +29,7 @@ import pandas as pd
 
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from anomaly_detection_spark.operators.sequential import _ladder_codes_np
+from anomaly_detection_spark.codes import ladder_code_np
 
 
 def _whole_batch(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
@@ -95,7 +95,7 @@ def streaming_ema_check(stream_df, *, N: int, LL: float, UL: float,
                 .ewm(alpha=s, adjust=False).mean().to_numpy()[1:]
         vn = (ema - mid) / half
         cols = {"value": v, "ema": ema,
-                "code": _ladder_codes_np(vn, warning_stages)}
+                "code": ladder_code_np(vn, warning_stages)}
         return cols, (float(ema[-1]), prev_n + len(v))
 
     return _stateful(stream_df, step, init=(float("nan"), 0),
@@ -264,7 +264,7 @@ def streaming_welford_check(stream_df, *, X: float,
             # vn 0, else inf
             vn = np.where(sd > 0, (v - mean_prior) / (X * sd),
                           np.where(v == mean_prior, 0.0, np.inf))
-        codes = _ladder_codes_np(vn, warning_stages)
+        codes = ladder_code_np(vn, warning_stages)
         codes[cnt <= 1] = 2
         # fold the whole batch into the carried moments (exact merge)
         if len(v):

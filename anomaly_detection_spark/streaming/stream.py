@@ -215,7 +215,7 @@ def streaming_curate(
     with mode=overwrite (a redelivered batch REPLACES its partial
     files instead of appending duplicates — readers load ``output_dir``
     and get ``batch_id`` as a partition column), and the audit append
-    is guarded by the ledger's pending() check, so a crash between the
+    is guarded by the ledger's committed keys, so a crash between the
     two replays the (idempotent) write and then commits the audit row
     once. Returns the StreamingQuery."""
     import time as _time
@@ -231,9 +231,7 @@ def streaming_curate(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         key = f"batch_{batch_id}"
-        todo = ledger.pending(
-            local_frame(spark, [(key,)], "partition_key string"))
-        if todo.isEmpty():
+        if key in ledger.committed_keys():
             return                       # redelivered after a crash
         t0 = _time.perf_counter()
         curated, report = curate(batch_df, config=config)

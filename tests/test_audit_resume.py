@@ -2,10 +2,17 @@
 partitions, rerun, assert only pending partitions recomputed and the
 final ledger is identical to an uninterrupted run."""
 
+import glob
+import json
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
-from anomaly_detection_spark.audit import AuditLedger, run_partitioned_checks
+from anomaly_detection_spark.audit import (
+    AUDIT_SCHEMA, AuditLedger, run_partitioned_checks,
+)
+from anomaly_detection_spark.catalog import read_table, write_partitioned
 from anomaly_detection_spark.corpus import generate_code_corpus
 from anomaly_detection_spark.operators.constraints import corpus_constraint_codes
 
@@ -205,19 +212,92 @@ def test_unreadable_ledger_raises(spark, tmp_path):
         AuditLedger(spark, str(path)).committed()
 
 
-def test_fresh_ledger_pending_plans_no_join(spark, tmp_path):
-    """With no ledger yet every partition is pending: ``pending`` returns
-    the partition frame itself, so its plan has no join and no scan of a
-    Python-built empty ledger frame."""
-    from tests.conftest import plan_lines
-
-    parts = spark.range(16).select(
-        F.col("id").cast("string").alias("partition_key"))
-    plan = "\n".join(plan_lines(
-        AuditLedger(spark, str(tmp_path / "fresh")).pending(parts)))
-    assert "Join" not in plan and "ExistingRDD" not in plan, plan
-
-
 def test_compact_missing_ledger_writes_nothing(spark, tmp_path):
     assert AuditLedger(spark, str(tmp_path / "none")).compact() == 0
     assert list(tmp_path.iterdir()) == []
+
+
+def test_resume_never_opens_committed_files(spark, tmp_path):
+    """Resume is a partition filter on the committed keys: a committed
+    bucket's file can turn to garbage after the table is read, and the
+    resumed run still commits exactly the pending buckets."""
+    path = str(tmp_path / "corpus")
+    write_partitioned(generate_code_corpus(spark, 4000), path, n_buckets=8)
+    ledger = AuditLedger(spark, str(tmp_path / "audit_prune"))
+    kw = dict(partition_col="bucket", value_col="content_len",
+              code_cols=CODE_COLS, ledger=ledger)
+    table = read_table(spark, path)
+    run_partitioned_checks(spark, corpus_constraint_codes(
+        table.filter(F.col("bucket") < 3), keep=["bucket"]), **kw)
+
+    table = read_table(spark, path)
+    victim = sorted(glob.glob(path + "/bucket=1/*.parquet"))[0]
+    with open(victim, "wb") as f:
+        f.write(b"not a parquet file")
+    resumed = run_partitioned_checks(
+        spark, corpus_constraint_codes(table, keep=["bucket"]), **kw)
+    assert sorted(r.partition_key for r in resumed.collect()) == \
+        [str(b) for b in range(3, 8)]
+    assert sorted(ledger.committed_keys()) == [str(b) for b in range(8)]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_runs_one_aggregate_job(spark, tmp_path):
+    """A fresh commit runs the aggregate and the ledger write, nothing
+    else (a missing ledger costs no job). A rerun over a fully committed
+    ledger runs the keys read and the aggregate, and appends nothing."""
+    from anomaly_detection_spark.session import local_frame
+
+    df = spark.range(40).select(
+        (F.col("id") % 4).alias("bucket"),
+        F.col("id").cast("double").alias("v"), F.lit(1).alias("c_ok"))
+    ledger = AuditLedger(spark, str(tmp_path / "audit_jobs"))
+    kw = dict(partition_col="bucket", value_col="v", code_cols=["c_ok"],
+              ledger=ledger)
+    keys = F.col("bucket").cast("string")
+    agg = _jobs(spark, lambda: df.groupBy(keys).count().collect())
+    write = _jobs(spark, lambda: AuditLedger(
+        spark, str(tmp_path / "other")).append(local_frame(
+            spark, [("0", "r", 0.0, 1, 1, 0, 0.0, 0.0, 0, 0, 0, "pass", 0.0)],
+            AUDIT_SCHEMA).coalesce(1)))
+    assert _jobs(spark, lambda: run_partitioned_checks(spark, df, **kw)) \
+        == agg + write
+
+    files = sorted(glob.glob(str(tmp_path / "audit_jobs" / "*.parquet")))
+    read_keys = _jobs(spark, ledger.committed_keys)
+    empty_agg = _jobs(spark, lambda: df.filter(
+        ~keys.isin(["0", "1", "2", "3"])).groupBy(keys).count().collect())
+    assert _jobs(spark, lambda: run_partitioned_checks(spark, df, **kw)) \
+        == read_keys + empty_agg
+    assert sorted(glob.glob(str(tmp_path / "audit_jobs" / "*.parquet"))) \
+        == files
+
+
+def test_cli_resume_on_catalog_layout(spark, tmp_path, capsys):
+    """``run.py --audit`` over a catalog layout keys on its bucket column:
+    the first run commits every bucket, the rerun validates nothing."""
+    from anomaly_detection_spark.run import main
+
+    layout = str(tmp_path / "corpus_cli")
+    write_partitioned(generate_code_corpus(spark, 3000), layout, n_buckets=8)
+    argv = ["--input", layout, "--audit", str(tmp_path / "audit_cli"),
+            "--json"]
+
+    def run() -> dict:
+        assert main(argv) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    first, second = run(), run()
+    assert first["rows"] == 3000 and first["partitions_done"] == 8
+    assert second["rows"] == 0 and second["partitions_done"] == 0

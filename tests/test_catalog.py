@@ -1,12 +1,11 @@
-"""Partitioned layout: pruning reaches the scan; audit resume reads only
-pending buckets' files."""
+"""Partitioned layout: pruning reaches the scan; bucket assignment is
+stable. (Audit resume over this layout: tests/test_audit_resume.py.)"""
 
 import glob
 
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.catalog import (
-    read_buckets,
     read_table,
     scan_has_partition_pruning,
     with_bucket,
@@ -27,7 +26,7 @@ def test_partitioned_write_prune_roundtrip(spark, tmp_path):
     full = read_table(spark, path)
     assert full.count() == 5000
 
-    pruned = read_buckets(spark, path, [0, 3])
+    pruned = full.filter(F.col("bucket").isin([0, 3]))
     assert scan_has_partition_pruning(pruned)
     assert not scan_has_partition_pruning(full)
     got_buckets = {r["bucket"] for r in
@@ -44,17 +43,3 @@ def test_partitioned_write_prune_roundtrip(spark, tmp_path):
     )
     assert mismatch == 0
 
-
-def test_resume_reads_only_pending_buckets(spark, tmp_path):
-    """Anti-join resume + partition pruning compose: the pending-bucket
-    read plan prunes to exactly the unfinished partitions."""
-    path = str(tmp_path / "corpus2")
-    df = generate_code_corpus(spark, 3000)
-    write_partitioned(df, path, key="repo", n_buckets=8)
-
-    done = {0, 1, 2}
-    pending = [b for b in range(8) if b not in done]
-    resumed = read_buckets(spark, path, pending)
-    assert scan_has_partition_pruning(resumed)
-    assert {r["bucket"] for r in resumed.select("bucket").distinct().collect()} \
-        == set(pending)

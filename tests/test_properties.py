@@ -66,9 +66,9 @@ def test_ladder_numpy_matches_reference_semantics(vn, stages):
     """The vectorized ladder equals the reference's ascending-loop rule:
     error outside [-1,1]; else warning iff ANY stage s has vn>s or
     vn<-s; else OK."""
-    from anomaly_detection_spark.operators.sequential import _ladder_codes_np
+    from anomaly_detection_spark.codes import ladder_code_np
 
-    got = _ladder_codes_np(np.array([vn]), tuple(stages))[0]
+    got = ladder_code_np(np.array([vn]), tuple(stages))[0]
     if vn > 1.0 or vn < -1.0:
         want = -1
     elif any(vn > s or vn < -s for s in stages):
